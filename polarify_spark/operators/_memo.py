@@ -1,19 +1,19 @@
 """Shared build-once insertion and materialization for cross-query memos.
 
-Three operator modules keep expensive, reused artifacts in module-level
-memos (``similarity._ANN_MEMO``, ``dedup._DEDUP_MEMO``, ``bpe._BPE_MEMO``)
-with one concurrency contract: two driver threads wanting the same key
-share ONE build; different keys build concurrently; the registry lock is
-held only for dict bookkeeping, never across a Spark job. This helper is
-that contract written once — the hand-rolled copy in ``bpe`` had drifted
-into a return-path race the shared form structurally can't have.
+The operator modules keep expensive, reused artifacts in module-level
+memos (``similarity._ANN_MEMO``, ``dedup._DEDUP_MEMO``, ``bpe._BPE_MEMO``,
+``search._SEARCH_MEMO``, ``ml._ML_MEMO``) with one concurrency contract:
+two driver threads wanting the same key share ONE build; different keys
+build concurrently; the registry lock is held only for dict bookkeeping,
+never across a Spark job. This helper is that contract written once.
 
-The MATERIALIZATION layer lives here too (hoisted from ``dedup`` in
-round 12 so the ANN and BPE memos share it): eager ``localCheckpoint``
-at a serialized storage level by default, or — when the session conf
+The MATERIALIZATION layer lives here too: eager ``localCheckpoint`` at a
+serialized storage level by default, or — when the session conf
 ``spark.polarify.artifacts.dir`` is set — a write-once durable parquet
 artifact keyed by the canonicalized plan + input files of the memo's
-corpus frame, committed with a filesystem-atomic marker file.
+corpus frame. On rename-atomic filesystems it is published by one
+no-overwrite rename of a tmp dir that already carries the commit marker;
+readers gate on that marker plus parquet's ``_SUCCESS``.
 """
 
 from __future__ import annotations
@@ -251,6 +251,102 @@ def artifact_key(key_df: "DataFrame") -> str:
     return hashlib.sha256(f"{s}\0{files}".encode()).hexdigest()[:16]
 
 
+def _artifact_path(key_df: "DataFrame", name: str) -> "str | None":
+    """``<ARTIFACTS_DIR_CONF>/<name>-<key16>`` for ``key_df``, or ``None``
+    when durable mode is off — the one path builder :func:`materialize`
+    and :func:`read_artifact` share."""
+    base = key_df.sparkSession.conf.get(ARTIFACTS_DIR_CONF, "")
+    if not base:
+        return None
+    _require_classic(key_df, "durable artifact mode")
+    return f"{base.rstrip('/')}/{name}-{artifact_key(key_df)}"
+
+
+def _jpath(path: str):
+    from pyspark import SparkContext
+
+    return SparkContext._jvm.org.apache.hadoop.fs.Path(path)
+
+
+def _hadoop_fs(spark, path: str):
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return _jpath(path).getFileSystem(conf)
+
+
+def _committed(fs, path: str) -> bool:
+    """The reader gate: a valid commit carries BOTH the marker and
+    parquet's ``_SUCCESS``. The marker alone is not enough: Hadoop's
+    ``createNewFile`` creates missing parent dirs, so a marker written
+    into a tmp reaped under its writer resurrects an EMPTY shell.
+    ``_SUCCESS`` proves the data write finished (default committer,
+    ``marksuccessfuljobs=true`` — ours on every path that writes these
+    artifacts)."""
+    return fs.exists(_jpath(f"{path}/{COMMIT_MARKER}")) and fs.exists(
+        _jpath(f"{path}/_SUCCESS")
+    )
+
+
+# The publish steps, module-level so the fault-injection tests can abort
+# the protocol between any two of them.
+def _write_parquet(df: "DataFrame", path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
+
+
+def _mark(fs, path: str) -> None:
+    fs.createNewFile(_jpath(f"{path}/{COMMIT_MARKER}"))
+
+
+def _rename(fs, src: str, dst: str) -> None:
+    """Hadoop's no-overwrite rename: raises ``FileAlreadyExistsException``
+    when ``dst`` exists, where the legacy ``FileSystem.rename`` returns
+    true and moves ``src`` INSIDE ``dst``."""
+    from pyspark import SparkContext
+
+    hfs = SparkContext._jvm.org.apache.hadoop.fs
+    fc = hfs.FileContext.getFileContext(fs.getUri(), fs.getConf())
+    opts = SparkContext._gateway.new_array(hfs.Options.Rename, 1)
+    opts[0] = hfs.Options.Rename.NONE
+    fc.rename(_jpath(src), _jpath(dst), opts)
+
+
+def _reap(fs, path: str) -> None:
+    """Best-effort: delete ``{path}.tmp-*`` siblings (writers that died
+    before their rename) and visible ``{path}/*.tmp-*`` children (a
+    rename LocalFs nested into the committed dir). Runs only once a
+    commit exists, so a live writer whose tmp it deletes falls back to
+    reading that commit."""
+    try:
+        for pattern in (f"{path}.tmp-*", f"{path}/*.tmp-*"):
+            for st in fs.globStatus(_jpath(pattern)) or []:
+                fs.delete(st.getPath(), True)
+    except Exception:
+        pass  # reaping is housekeeping, never load-bearing
+
+
+def _publish(df: "DataFrame", fs, path: str) -> None:
+    hpath = _jpath(path)
+    scheme = (hpath.toUri().getScheme() or fs.getUri().getScheme() or "")
+    if scheme.lower() in _OBJECT_STORE_SCHEMES:
+        _write_parquet(df, path)
+        _mark(fs, path)
+        if not _committed(fs, path):
+            raise IOError(f"could not commit durable artifact at {path}")
+        return
+    import uuid
+
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    try:
+        _write_parquet(df, tmp)
+        _mark(fs, tmp)
+        # every publish arrives committed, so anything uncommitted at
+        # dst is a dead writer's leftovers, never a live racer's
+        if fs.exists(hpath) and not _committed(fs, path):
+            fs.delete(hpath, True)
+        _rename(fs, tmp, path)
+    finally:
+        fs.delete(_jpath(tmp), True)
+
+
 def materialize(
     df: "DataFrame",
     name: str,
@@ -262,21 +358,18 @@ def materialize(
     that conf is set (then read back — every consumer scans a durable
     table that survives executor loss and later sessions).
 
-    Durable-mode write protocol (restart- and cross-process-safe).
-    Readers gate on the :data:`COMMIT_MARKER` file inside the artifact
-    dir, created with the filesystem-atomic ``createNewFile`` strictly
-    AFTER every part file is in place — never on parquet's ``_SUCCESS``
-    (non-atomic-copy hazard on object stores, ADVICE r11 #1). Writers:
+    Durable mode reads an artifact only through :func:`_committed`'s
+    gate (:data:`COMMIT_MARKER` AND ``_SUCCESS``) and otherwise publishes
+    it:
 
-    * rename-atomic filesystems (local, HDFS): write to a uniquely
-      suffixed ``.tmp-`` sibling, rename into place, then commit. A
-      racing winner publishing between our existence check and the
-      rename makes Hadoop's rename move our tmp INSIDE the live dir as
-      a child (it returns true rather than refusing) — detected and the
-      nested child removed, so the loser can never leave duplicate part
-      files behind. A dir WITHOUT the marker is replaceable (crashed
-      writer's leftovers, an uncommitted racer, or a pre-marker-protocol
-      artifact — the last is rebuilt once, never wrongly read).
+    * rename-atomic filesystems (local, HDFS): write a uniquely suffixed
+      ``.tmp-`` sibling, create the marker inside it, then publish with
+      ONE no-overwrite rename — the artifact appears committed or not at
+      all. A racer that committed first makes our rename raise; our tmp
+      is deleted (always, in a ``finally``) and we read the winner's
+      rows. LocalFs implements the no-overwrite rename as
+      check-then-rename, so in a tiny window our tmp can still land
+      inside the winner's dir; :func:`_reap` removes that child.
     * object stores (s3a://, gs://, abfs://...): rename is a file-by-file
       copy, so the parquet write goes straight to the final path and the
       marker lands last. Cross-process write races here are benign for
@@ -284,140 +377,21 @@ def materialize(
       files; the in-process memo lock serializes same-key builds, and
       same-key cross-process builds produce semantically identical rows.
 
-    After a successful publish (or the skip-to-read path) sibling
-    ``.tmp-`` dirs from crashed writers are best-effort reaped
-    (ADVICE r11 #2) — this can abort a concurrently racing same-key
-    writer's doomed tmp write, which then retries into the committed
-    read path."""
-    spark = df.sparkSession
-    base = spark.conf.get(ARTIFACTS_DIR_CONF, "")
-    if not base:
+    A concurrent winner can abort our publish at any step (its reap
+    deletes our in-flight tmp). Any failure is therefore success when a
+    valid commit exists afterwards, and raised when none does."""
+    path = _artifact_path(df if key_df is None else key_df, name)
+    if path is None:
         return local_checkpoint(df, storage=storage)
-    _require_classic(df, "durable artifact mode")
-    key_src = df if key_df is None else key_df
-    path = f"{base.rstrip('/')}/{name}-{artifact_key(key_src)}"
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path
-    hpath = jpath(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    marker = jpath(f"{path}/{COMMIT_MARKER}")
-    success = jpath(f"{path}/_SUCCESS")
-
-    def _committed() -> bool:
-        # A valid commit carries BOTH files. The marker alone is not
-        # enough: Hadoop's createNewFile creates missing parent dirs, so
-        # a winner whose dst was deleted by a racer (its legitimate
-        # uncommitted-dst cleanup) can otherwise resurrect an EMPTY dir
-        # containing only the marker — and certify zero rows. Parquet's
-        # own _SUCCESS proves the data write finished; the marker proves
-        # the dir was fully in place when certified. Assumes the default
-        # committer (marksuccessfuljobs=true) — ours, on every path that
-        # writes these artifacts.
-        return fs.exists(marker) and fs.exists(success)
-
-    def _reap_tmp() -> None:
+    spark = df.sparkSession
+    fs = _hadoop_fs(spark, path)
+    if not _committed(fs, path):
         try:
-            for st in fs.globStatus(jpath(f"{path}.tmp-*")) or []:
-                fs.delete(st.getPath(), True)
+            _publish(df, fs, path)
         except Exception:
-            pass  # reaping is best-effort housekeeping, never load-bearing
-
-    def _publish_once() -> None:
-        scheme = (hpath.toUri().getScheme() or fs.getUri().getScheme() or "")
-        if scheme.lower() in _OBJECT_STORE_SCHEMES:
-            df.write.mode("overwrite").parquet(path)
-            fs.createNewFile(marker)
-            if not _committed():
-                raise IOError(f"could not commit durable artifact at {path}")
-            return
-        import uuid
-
-        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        tpath = jpath(tmp)
-        df.write.mode("overwrite").parquet(tmp)
-        # Re-check AFTER the (slow) write: a racing writer may have
-        # COMMITTED meanwhile — defer to the winner and never delete a
-        # VALIDLY committed dir (a reader in another session may already
-        # hold a lazy frame over it). Anything else at dst — marker-less
-        # leftovers, or a marker-only resurrect shell — is replaceable.
-        if _committed():
-            fs.delete(tpath, True)
-            return
-        if fs.exists(hpath):
-            fs.delete(hpath, True)
-        renamed = fs.rename(tpath, hpath)
-        nested = jpath(f"{path}/{tmp.rsplit('/', 1)[-1]}")
-        if renamed and not fs.exists(nested):
-            # we own the dir. Clear ANY nested tmp child first (a racer
-            # can rename its tmp INTO ours in the same instant ours
-            # lands — theirs, not just a dir matching our own basename),
-            # then commit and VALIDATE: if _SUCCESS is gone the dir was
-            # deleted-and-resurrected under us — un-commit and retry.
-            try:
-                for st in fs.globStatus(jpath(f"{path}/*.tmp-*")) or []:
-                    fs.delete(st.getPath(), True)
-            except Exception:
-                pass
-            fs.createNewFile(marker)
-            if not _committed():
-                fs.delete(hpath, True)
-                raise IOError(
-                    f"durable artifact at {path} was displaced mid-commit"
-                )
-            return
-        # lost the race: dst reappeared between our delete and rename,
-        # so Hadoop nested our tmp inside it (or refused). Remove the
-        # loser's data, then defer.
-        if fs.exists(nested):
-            fs.delete(nested, True)
-        fs.delete(tpath, True)
-        if not _committed():
-            # winner renamed but crashed (or hasn't yet run
-            # createNewFile). On a rename-atomic FS an existing dir is
-            # complete content — its own parquet _SUCCESS proves the
-            # write finished, so committing it ourselves is safe here
-            # (and ONLY here; on object stores this inference is the
-            # exact hazard the marker exists to close).
-            if fs.exists(success):
-                fs.createNewFile(marker)
-                if not _committed():
-                    # the dir vanished between the _SUCCESS check and
-                    # our marker create (a further racer's cleanup) —
-                    # never return a shell; the retry wrapper re-runs
-                    raise IOError(
-                        f"durable artifact at {path} was displaced "
-                        f"mid-commit"
-                    )
-            else:
-                raise IOError(
-                    f"could not publish durable artifact at {path}"
-                )
-
-    # A concurrent same-key winner can break our attempt MID-FLIGHT in
-    # ways no pre-check covers: its post-commit reap deletes our tmp
-    # while our parquet job is writing it; its uncommitted-dst cleanup
-    # removes the dir under our createNewFile. Every such abort leaves
-    # the winner's VALID commit behind (or nothing), so the recovery is
-    # always the same — if a validated commit exists now, that IS
-    # success (pinned by
-    # test_durable_publish_concurrent_writers_single_artifact, which
-    # flaked ~1-in-4 before this wrapper). Retries cover the
-    # abort-without-commit interleavings (a two-writer race resolves in
-    # at most one displacement per opponent attempt); failing every
-    # attempt with no commit is a genuine error and surfaces.
-    for attempt in (1, 2, 3):
-        if _committed():
-            break
-        try:
-            _publish_once()
-            break
-        except Exception:
-            if _committed():
-                break
-            if attempt == 3:
+            if not _committed(fs, path):
                 raise
-    _reap_tmp()
+    _reap(fs, path)
     return spark.read.parquet(path)
 
 
@@ -432,19 +406,8 @@ def read_artifact(key_df: "DataFrame", name: str) -> "DataFrame | None":
     has already executed by the time the finished frame reaches it. A
     build that probes this first skips the whole loop on a later
     session's refill — read the index, don't retrain it."""
+    path = _artifact_path(key_df, name)
     spark = key_df.sparkSession
-    base = spark.conf.get(ARTIFACTS_DIR_CONF, "")
-    if not base:
+    if path is None or not _committed(_hadoop_fs(spark, path), path):
         return None
-    _require_classic(key_df, "durable artifact mode")
-    path = f"{base.rstrip('/')}/{name}-{artifact_key(key_df)}"
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(f"{path}/{COMMIT_MARKER}")
-    success = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    fs = marker.getFileSystem(sc._jsc.hadoopConfiguration())
-    # same validated gate as materialize(): marker AND _SUCCESS — a
-    # marker-only dir is a resurrect shell, not a commit
-    if fs.exists(marker) and fs.exists(success):
-        return spark.read.parquet(path)
-    return None
+    return spark.read.parquet(path)

@@ -19,12 +19,13 @@ the commit protocol deliberately left out of the hot path:
   oldest-committed survivors beyond it — the backstop when
   concurrently-live configurations proliferate past any sensible
   ``keep`` (see README on the keep-vs-configurations subtlety).
-* UNCOMMITTED dirs (missing either commit file: crashed writers, racers
-  that lost, pre-marker-protocol leftovers) and orphaned ``.tmp-``
-  siblings are reaped once older than a grace window (default 60 min),
-  so a LIVE writer mid-publish is never raced — ``materialize`` itself
-  already reaps tmp siblings opportunistically, this catches the ones
-  whose writer died.
+* UNCOMMITTED dirs (missing either commit file: object-store writers
+  that crashed mid-write, pre-marker-protocol leftovers) and orphaned
+  ``.tmp-`` siblings (rename-atomic writers that died before their
+  publishing rename) are reaped once older than a grace window (default
+  60 min), so a LIVE writer mid-publish is never raced — ``materialize``
+  itself reaps tmp leftovers once a commit exists, this catches the
+  ones no later publish of the same artifact came by to reap.
 
 Deleting an artifact a RUNNING session holds a lazy frame over breaks
 that session's subsequent reads (the standard retention trade-off, same
