@@ -236,10 +236,11 @@ def _compact_stdout_line(
 
 
 def _detail_paths(repo_root: Path, cpus: str) -> list[Path]:
-    """Both on-disk homes of the full bench payload: the legacy unsuffixed
-    file (cross-round diff tooling reads it) plus a per-core-count copy so
-    runs at different $SPARK_GRAFT_CPUS never clobber each other's full
-    per-query maps."""
+    """Both on-disk homes of the full bench payload: a per-core-count copy
+    so runs at different $SPARK_GRAFT_CPUS never clobber each other's full
+    per-query maps, plus the legacy unsuffixed file (cross-round diff
+    tooling reads it), which mirrors the LATEST run's
+    ``BENCH_DETAIL_c{N}.json`` whatever its core count."""
     return [
         repo_root / "BENCH_DETAIL.json",
         repo_root / f"BENCH_DETAIL_c{cpus}.json",
@@ -339,46 +340,35 @@ def main() -> None:
     # phantom "regression" each time the sort moved). The sweep times a
     # SECOND, steady-state run right after the first for two detected
     # classes of query: (a) any query whose first run EXECUTED a memo
-    # build (the fill payer — detected by wrapping the build callable,
-    # not the memo_build call, so warm HITS no longer double-execute
-    # their family for zero signal, the r8 review finding); (b) any
-    # query whose first wall exceeded _STEADY_RERUN_WALL_S, memo or not —
+    # build (the fill payer — read from the memo families' build records,
+    # which warm HITS never emit); (b) any query whose first wall
+    # exceeded _STEADY_RERUN_WALL_S, memo or not —
     # the heavies (lineitem_profile, logreg, charlm, pagerank, the
     # streaming drains) previously had no reproducibility signal of the
     # kind that caught the r8 triangles anomaly. "queries"/"value" keep
     # the first-run walls (comparable with every prior round);
     # "queries_steady" is the reproducible per-query number to track
     # regressions against.
-    from polarify_spark.operators import _memo as _memo_mod
+    import logging
+
+    from polarify_spark.operators._memo import FAMILIES
 
     # [r12] record WHICH builds fired, not just whether one did: the fill
     # payer moves whenever the registry sort shifts (r6->r7 the dedup fill
     # migrated queries and read as a phantom regression), and a named
     # "queries_fills" entry lets the next round's verdict separate
     # fill-migration from real regression without re-deriving sort order.
+    # Every executed memo build logs one record (key label included) on
+    # the "polarify_spark.memo" logger; warm hits log nothing.
     _memo_built: list = []
-    _orig_memo_build = _memo_mod.memo_build
 
-    def _tracking_memo_build(
-        registry_lock, memo, key, build, locks=None, trim=None
-    ):
-        def tracked_build():
-            import re
+    class _FillRecorder(logging.Handler):
+        def emit(self, record: logging.LogRecord) -> None:
+            _memo_built.append(record.key)
 
-            # object reprs in composite keys (a session-keyed memo) carry
-            # memory addresses — normalize so fills diff cleanly across runs
-            label = key if isinstance(key, str) else re.sub(
-                r"<([\w.]+) object at 0x[0-9a-f]+>", r"<\1>", repr(key)
-            )
-            _memo_built.append(label)
-            return build()
-
-        return _orig_memo_build(
-            registry_lock, memo, key, tracked_build, locks=locks, trim=trim
-        )
-
-    _memo_mod.memo_build = _tracking_memo_build
-
+    memo_log = logging.getLogger("polarify_spark.memo")
+    memo_log.addHandler(_FillRecorder())
+    memo_log.setLevel(logging.INFO)
 
     def _sweep(with_steady: bool):
         """One full registry pass in canonical sorted order; returns
@@ -415,33 +405,27 @@ def main() -> None:
                 steady_spread[name] = [round(min(runs), 4), round(max(runs), 4)]
         return timings, steady, steady_spread, fills
 
-    try:
-        timings, steady, steady_spread, fills = _sweep(with_steady=True)
-        # Second full pass (VERDICT r12 ask #2): the four-run identical-code
-        # band for the total was 166.6-202.2 s, so a single-shot total
-        # inside that band is unadjudicable. All shared caches are released
-        # first, so pass 2 re-pays every memo fill like pass 1 — but it
-        # runs codegen-warm (Janino's class cache hits on the identical
-        # plans), so it is a systematically-faster same-code floor, not an
-        # independent draw; compare rounds pass1-vs-pass1 on "queries"/
-        # "value", and use [pass2, pass1] as the same-session band a drift
-        # must EXIT before it counts as regression.
-        release_shared_caches(spark, scope="all")
-        # the on-disk IVF index PATH memo deliberately survives
-        # release_shared_caches (knn.py: the artifact holds no JVM
-        # memory, and index_serve's semantic is build-once/serve-many) —
-        # but the band premise above is "pass 2 re-pays EVERY memo
-        # fill", so drop it here too or similarity_knn_index_serve's
-        # pass-2 wall is index-warm while the note claims otherwise.
-        # Orphaned dirs stay tracked in _INDEX_DIRS and are reaped at
-        # interpreter exit, so the clear leaks nothing.
-        from polarify_spark.operators import knn as _knn
-
-        with _knn._INDEX_MEMO_LOCK:
-            _knn._INDEX_MEMO.clear()
-        timings2, _, _, _ = _sweep(with_steady=False)
-    finally:
-        _memo_mod.memo_build = _orig_memo_build
+    timings, steady, steady_spread, fills = _sweep(with_steady=True)
+    # Second full pass (VERDICT r12 ask #2): the four-run identical-code
+    # band for the total was 166.6-202.2 s, so a single-shot total
+    # inside that band is unadjudicable. All shared caches are released
+    # first, so pass 2 re-pays every memo fill like pass 1 — but it
+    # runs codegen-warm (Janino's class cache hits on the identical
+    # plans), so it is a systematically-faster same-code floor, not an
+    # independent draw; compare rounds pass1-vs-pass1 on "queries"/
+    # "value", and use [pass2, pass1] as the same-session band a drift
+    # must EXIT before it counts as regression.
+    release_shared_caches(spark, scope="all")
+    # the on-disk IVF index PATH family (knn_index) deliberately survives
+    # release_shared_caches (the artifact holds no JVM memory, and
+    # index_serve's semantic is build-once/serve-many) — but the band
+    # premise above is "pass 2 re-pays EVERY memo fill", so drop it here
+    # too or similarity_knn_index_serve's pass-2 wall is index-warm while
+    # the note claims otherwise. Orphaned dirs stay tracked in
+    # knn._INDEX_DIRS and are reaped at interpreter exit, so the clear
+    # leaks nothing.
+    FAMILIES["knn_index"].clear()
+    timings2, _, _, _ = _sweep(with_steady=False)
 
     def _family(name: str) -> str:
         tok = name.split("_", 1)[0]

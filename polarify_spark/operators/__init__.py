@@ -72,12 +72,11 @@ _register(streaming.QUERIES)
 
 
 def release_shared_caches(spark, scope: str = "all") -> None:
-    """Drop cross-query shared artifacts: the dedup gram/signature memo
-    (``dedup._DEDUP_MEMO``, scope ``"dedup"``), the ANN index memo
-    (``similarity._ANN_MEMO``, scope ``"ann"``), or both plus the BPE
-    trained-state memo (``bpe._BPE_MEMO``), the search-family index memo
-    (``search._SEARCH_MEMO``: inverted index + charlm bigram counts), and
-    every catalog-cached DataFrame (scope ``"all"``).
+    """Drop the cross-query memo families a scope names (each
+    ``_memo.MemoFamily`` lists its scopes): ``"dedup"`` drops the dedup
+    stage memo, the span-plan cache and the simhash handles; ``"ann"``
+    drops the ANN index memo; ``"all"`` drops every family except the
+    on-disk knn index paths, plus every catalog-cached DataFrame.
 
     The memos deliberately outlive single queries (an ANN index is built
     once per corpus and served many times), but a long-running session that
@@ -92,95 +91,45 @@ def release_shared_caches(spark, scope: str = "all") -> None:
     whenever the next full GC happens."""
     import gc
 
-    from . import dedup, similarity
+    from ._memo import FAMILIES
 
     if scope not in ("all", "ann", "dedup"):
         raise ValueError(f"unknown release scope {scope!r}")
-    if scope in ("all", "ann"):
-        with similarity._ANN_MEMO_LOCK:
-            similarity._ANN_MEMO.clear()
-    if scope in ("all", "dedup"):
-        # Quiesce in-flight simhash handle builds before the paired
-        # clears (ADVICE r12): a builder that read a ``_DEDUP_MEMO``
-        # entry before the registry clear but inserted its handle after
-        # the handle-memo clear would leave a handle whose memo dict is
-        # detached from the registry — ``_memo_src`` returns None and
-        # later durable artifacts (simhash_pairs, triangles, pagerank)
-        # get keyed off session-specific checkpoint plans. Builders hold
-        # their per-key lock for the WHOLE build (``_memo.memo_build``),
-        # so holding every per-key lock excludes them; the snapshot is
-        # released before the acquisitions because a mid-build thread
-        # takes the registry lock (briefly) for its final insert, and
-        # holding registry-then-waiting-on-per-key would deadlock
-        # against its per-key-then-registry order. Acquisition follows
-        # dict insertion order, so two concurrent releases can't
-        # deadlock each other either.
-        with dedup._SIMHASH_HANDLE_LOCK:
-            handle_locks = list(dedup._SIMHASH_HANDLE_LOCKS.values())
-        # Acquire INSIDE the try and release only what was actually
-        # acquired (ADVICE r13): an exception mid-loop (KeyboardInterrupt
-        # between acquisitions) no longer strands already-held per-key
-        # locks, which would permanently deadlock future handle builds
-        # for those keys in this process. Residual (documented, CPython-
-        # irreducible in pure Python): an interrupt delivered in the one
-        # bytecode between acquire() returning and the append leaks that
-        # single lock — pre-appending instead would release an
-        # unacquired Lock (RuntimeError) when acquire() itself raises.
-        acquired: list = []
-        try:
-            for hl in handle_locks:
-                hl.acquire()
-                acquired.append(hl)
-            with dedup._DEDUP_MEMO_LOCK:
-                del dedup._DEDUP_MEMO[:]
-                dedup._SPAN_PLAN_CACHE.clear()
-                # _SPAN_PLAN_LOCKS deliberately survives (the bpe
-                # convention): a build mid-flight holds its per-key
-                # lock, and clearing the registry would hand a racing
-                # thread a FRESH lock — the duplicate-build race the
-                # locks exist to prevent. Lock objects are content-free,
-                # bounded by corpora ever seen.
-            with dedup._SIMHASH_HANDLE_LOCK:
-                # the O(1) (memo, banded) handle front-cache must drop
-                # with the registry it points into, or a released dedup
-                # memo would keep serving the old banded checkpoint.
-                # Cleared AFTER the registry so no handle inserted
-                # between the two clears can outlive both. Residual
-                # (documented, not closed): a first-touch build for a
-                # key whose per-key lock did not exist at snapshot time
-                # is not excluded and can insert after this clear —
-                # but ``_SIMHASH_HANDLE_LOCKS`` itself survives
-                # releases, so that needs an sf_dir never seen by this
-                # process with its multi-second build exactly
-                # straddling the release call.
-                dedup._SIMHASH_HANDLE_MEMO.clear()
-        finally:
-            for hl in acquired:
-                hl.release()
-    if scope == "all":
-        from . import bpe, ml, search
-
-        with ml._ML_MEMO_LOCK:
-            # lock registry survives (the bpe convention) so a racing
-            # thread can never duplicate a mid-flight training run
-            ml._ML_MEMO.clear()
-
-        with search._SEARCH_MEMO_LOCK:
-            # wholesale clear drops the per-key build locks INSIDE each
-            # memo dict (the _ANN_MEMO convention, unlike the separate
-            # _BPE_BUILD_LOCKS registry): a release racing a mid-build
-            # thread can at worst duplicate one index build — benign
-            # Spark work, and in durable mode materialize()'s publish
-            # protocol already absorbs concurrent same-key writers.
-            del search._SEARCH_MEMO[:]
-        with bpe._BPE_MEMO_LOCK:
-            bpe._BPE_MEMO.clear()
-            # _BPE_BUILD_LOCKS deliberately survives the release: a build
-            # mid-flight holds its per-corpus lock, and clearing the
-            # registry would hand a racing thread a FRESH lock — exactly
-            # the duplicate-train race the locks exist to prevent. The
-            # registry holds only content-free Lock objects, bounded by
-            # the number of corpora ever seen.
+    doomed = [f for f in FAMILIES.values() if scope in f.scopes]
+    # Quiesce in-flight builds of the families whose values hold another
+    # family's dicts (ADVICE r12): a simhash handle build that read a
+    # dedup dict before the dedup clear but inserted its handle after the
+    # handle clear would leave a handle whose dict is detached — ``src``
+    # returns None and later durable artifacts (simhash_pairs, triangles,
+    # pagerank) get keyed off session-specific checkpoint plans. Builders
+    # hold their per-key lock for the WHOLE build, so holding every
+    # per-key lock excludes them. Only these outermost families are
+    # quiesced: their builds run inner families' builds, never the
+    # reverse, so no lock order inverts. The snapshot is taken before the
+    # acquisitions (a mid-build thread takes the family lock briefly for
+    # its insert), and acquisition follows insertion order, so two
+    # releases can't deadlock each other. Locks are acquired INSIDE the
+    # try and only acquired ones released (ADVICE r13); an interrupt in
+    # the one bytecode between acquire() and append still leaks that lock.
+    # Residual: a first-touch build whose per-key lock did not exist at
+    # snapshot time is not excluded (needs a key never seen by this
+    # process with its build straddling the release).
+    acquired: list = []
+    try:
+        for fam in doomed:
+            if fam.quiesce:
+                with fam.lock:
+                    locks = list(fam.locks.values())
+                for lock in locks:
+                    lock.acquire()
+                    acquired.append(lock)
+        # family order: a quiesced family clears AFTER the dicts its
+        # values point into, so no handle can outlive both clears
+        for fam in doomed:
+            fam.clear()
+    finally:
+        for lock in acquired:
+            lock.release()
     # the catalog cache is always safe to drop: the artifacts that carry
     # across query groups live in the memos as localCheckpoint snapshots,
     # not as catalog-cached plans

@@ -1,11 +1,12 @@
 """Shared build-once insertion and materialization for cross-query memos.
 
-The operator modules keep expensive, reused artifacts in module-level
-memos (``similarity._ANN_MEMO``, ``dedup._DEDUP_MEMO``, ``bpe._BPE_MEMO``,
-``search._SEARCH_MEMO``, ``ml._ML_MEMO``) with one concurrency contract:
-two driver threads wanting the same key share ONE build; different keys
-build concurrently; the registry lock is held only for dict bookkeeping,
-never across a Spark job. This helper is that contract written once.
+The operator modules keep expensive, reused artifacts in memo FAMILIES
+(:class:`MemoFamily`), all declared in :data:`FAMILIES` below with one
+concurrency contract: two driver threads wanting the same key share ONE
+build; different keys build concurrently; the family lock is held only
+for dict bookkeeping, never across a Spark job. Every executed build
+(never a hit) emits one ``logging`` record on the ``polarify_spark.memo``
+logger; ``operators.release_shared_caches`` drops families by scope.
 
 The MATERIALIZATION layer lives here too: eager ``localCheckpoint`` at a
 serialized storage level by default, or — when the session conf
@@ -18,6 +19,7 @@ readers gate on that marker plus parquet's ``_SUCCESS``.
 
 from __future__ import annotations
 
+import logging
 import threading
 from typing import TYPE_CHECKING
 
@@ -32,15 +34,39 @@ if TYPE_CHECKING:
 
 _MISSING = object()
 
+#: one INFO record per executed memo build, carrying ``family``, ``key``
+#: (:func:`key_label`), ``event`` (``build``, or ``rebuild`` when an entry
+#: of a replaced session was evicted), ``mode`` (``durable`` when the build
+#: resolved a durable artifact path, else ``local``) and ``wall_ms``.
+#: While INFO is off for this logger (the default) a build pays one
+#: ``isEnabledFor`` check and a hit pays nothing.
+_LOG = logging.getLogger("polarify_spark.memo")
+
+#: per-thread stack of the builds currently running (one ``[durable]``
+#: flag each), so :func:`_artifact_path` can mark them durable without
+#: an extra conf read
+_OPEN_BUILDS = threading.local()
+
+
+def key_label(key) -> str:
+    """A memo key as a run-independent string: a str as-is, anything else
+    as its ``repr`` with ``<pkg.Class object at 0x...>`` shortened to
+    ``<pkg.Class>`` (session-keyed keys carry memory addresses)."""
+    import re
+
+    if isinstance(key, str):
+        return key
+    return re.sub(r"<([\w.]+) object at 0x[0-9a-f]+>", r"<\1>", repr(key))
+
 
 def memo_build(registry_lock, memo: dict, key, build, locks=None, trim=None):
     """Per-key locked check-and-insert into ``memo``; returns the entry.
 
     ``locks`` defaults to ``memo`` itself, with lock entries stored under
-    ``("lock", key)`` — the similarity/dedup convention, safe there
-    because nothing pops individual keys from a per-corpus memo dict.
-    A memo that evicts plain keys (bpe's LRU) passes its separate lock
-    registry so trims never count or drop lock entries.
+    ``("lock", key)`` — safe for the plan-keyed families' per-corpus
+    dicts, because nothing pops individual keys from them. A memo that
+    evicts plain keys (an LRU) passes its separate lock registry so trims
+    never count or drop lock entries.
 
     ``trim`` runs under ``registry_lock`` immediately after an insert
     (the LRU hook). The built value is returned from a LOCAL binding, not
@@ -66,49 +92,208 @@ def memo_build(registry_lock, memo: dict, key, build, locks=None, trim=None):
         return value
 
 
-def corpus_memo_build(
-    registry_lock, memo: dict, locks: dict, spark, key, build, cap: int = 4
-):
-    """Capped per-corpus memo of session-bound values (the bpe/ml
-    trained-artifact shape): entries are stored as ``(session, value)``
-    and a hit bound to a DIFFERENT SparkSession is evicted and rebuilt —
-    memo values hold checkpoint-RDD-backed DataFrames, and serving them
-    across sessions raises ``Cannot call methods on a stopped
-    SparkContext`` (the guard ``_dedup_stage_memo``/``_ann_index_memo``
-    get from their ``sparkSession is`` staging check, written once here
-    for sf_dir-keyed memos). If a racing thread inserts a different
-    session's build between our eviction and ``memo_build``'s check, the
-    evict-and-build cycle RETRIES once (ADVICE r12 / VERDICT r13 #1):
-    evicting the foreign entry again and rebuilding under the per-key
-    lock restores the single-build contract after a session swap — the
-    pre-r14 behavior handed EVERY new-session thread caught by the race
-    a full unmemoized private rebuild. Eviction is not poisoning: the
-    foreign caller already holds its value via ``memo_build``'s local
-    binding. Only a PERSISTENT foreign racer (a second live session
-    hammering the same key — not a real deployment shape; the guard
-    exists for session restarts) exhausts the retry and falls back to a
-    bounded private rebuild, never an unbounded ping-pong."""
+class MemoFamily:
+    """One named family of memoized artifacts, in one of two lookup shapes.
 
-    def trim() -> None:
-        while len(memo) > cap:
-            memo.pop(next(iter(memo)))
+    ``by="plan"``: :attr:`memo` is a list of ``(pure corpus frame,
+    {key: value})`` pairs. :meth:`corpus` finds a corpus's dict by session
+    identity plus ``sameSemantics``; :meth:`build` and :meth:`artifact`
+    fill it; :meth:`src` maps the dict back to its pure frame, the
+    identity durable artifacts are keyed by (materialized artifacts embed
+    checkpoint RDD ids / read-back paths, which differ across sessions).
+    The per-key build locks live inside each dict and drop with it: a
+    release racing a build can at worst duplicate that one build (benign
+    Spark work; durable publishes absorb concurrent same-key writers).
 
-    for _attempt in (1, 2):
-        with registry_lock:
-            cur = memo.get(key)
-            if cur is not None and cur[0] is not spark:
-                memo.pop(key, None)
-        entry = memo_build(
-            registry_lock,
-            memo,
-            key,
-            lambda: (spark, build()),
-            locks=locks,
-            trim=trim,
-        )
-        if entry[0] is spark:
-            return entry[1]
-    return build()
+    ``by="key"``: :attr:`memo` maps a key (usually the corpus dir) to
+    ``(session, value)`` and :meth:`get` fills it. The build locks live in
+    :attr:`locks`, which survives :meth:`clear`: a build mid-flight holds
+    its per-key lock, and a cleared registry would hand a racing thread a
+    FRESH lock — the duplicate build the locks exist to prevent (they are
+    content-free, bounded by the keys ever seen).
+
+    ``cap`` bounds the corpora (or keys) kept; ``scopes`` lists the
+    ``release_shared_caches`` scopes that drop the family. ``quiesce``
+    marks a family whose values hold another family's dicts: a release
+    takes all of its per-key locks before clearing (see
+    ``release_shared_caches``)."""
+
+    def __init__(self, name, cap: int, by: str, scopes=(), quiesce=False):
+        self.name, self.cap, self.by = name, cap, by
+        self.scopes, self.quiesce = tuple(scopes), quiesce
+        self.lock = threading.Lock()
+        self.memo: "list | dict" = [] if by == "plan" else {}
+        self.locks: dict = {}
+
+    def clear(self) -> None:
+        with self.lock:
+            self.memo.clear()
+
+    def _logged(self, key, build, event: str = "build"):
+        """``build`` wrapped to emit the family's build record."""
+
+        def run():
+            if not _LOG.isEnabledFor(logging.INFO):
+                return build()
+            import time
+
+            frame = [False]
+            stack = _OPEN_BUILDS.__dict__.setdefault("stack", [])
+            stack.append(frame)
+            t0 = time.perf_counter()
+            try:
+                value = build()
+            finally:
+                stack.pop()
+            fields = {
+                "family": self.name,
+                "key": key_label(key),
+                "event": event,
+                "mode": "durable" if frame[0] else "local",
+                "wall_ms": round((time.perf_counter() - t0) * 1000, 1),
+            }
+            _LOG.info(
+                "%(family)s %(key)s %(event)s %(mode)s %(wall_ms)s ms",
+                fields,
+                extra=fields,
+            )
+            return value
+
+        return run
+
+    # -- by="plan" ---------------------------------------------------------
+
+    def corpus(self, src: "DataFrame") -> dict:
+        """The per-corpus dict for pure plan ``src``, registered on first
+        touch under the family lock (two threads must never register two
+        dicts for one corpus: later lookups would miss half the builds)."""
+        with self.lock:
+            for s, memo in self.memo:
+                if s.sparkSession is src.sparkSession and src.sameSemantics(s):
+                    return memo
+            memo: dict = {}
+            self.memo.append((src, memo))
+            del self.memo[: -self.cap]
+            return memo
+
+    def src(self, memo: dict) -> "DataFrame | None":
+        """The pure frame that registered ``memo``, or ``None`` once the
+        dict is detached (released or trimmed)."""
+        with self.lock:
+            for s, m in self.memo:
+                if m is memo:
+                    return s
+        return None
+
+    def build(self, memo: dict, key, build: "Callable"):
+        """Build-once ``memo[key]`` under its per-key lock."""
+        return memo_build(self.lock, memo, key, self._logged(key, build))
+
+    def artifact(
+        self,
+        memo: dict,
+        key,
+        build_plan: "Callable[[], DataFrame]",
+        name: "str | None" = None,
+    ) -> "DataFrame":
+        """Build-once MATERIALIZED artifact ``memo[key]``: ``build_plan``'s
+        result goes through :func:`materialize`, durably keyed on disk as
+        ``<name>-<artifact_key(src)>`` (``name`` defaults to ``key``). A
+        committed durable artifact is probed BEFORE ``build_plan`` runs: a
+        build with eager driver-side work (connected components, PQ Lloyd
+        rounds) would otherwise execute in full on a refill, with
+        ``materialize``'s skip-to-read only sparing the final write."""
+        name = key if name is None else name
+
+        def build() -> "DataFrame":
+            src = self.src(memo)
+            if src is not None:
+                art = read_artifact(src, name)
+                if art is not None:
+                    return art
+            return materialize(build_plan(), name, src)
+
+        return self.build(memo, key, build)
+
+    # -- by="key" ----------------------------------------------------------
+
+    def get(self, spark, key, build: "Callable"):
+        """Capped memo of session-bound values: a hit bound to a DIFFERENT
+        SparkSession is evicted and rebuilt — memo values hold
+        checkpoint-RDD-backed DataFrames, and serving them across sessions
+        raises ``Cannot call methods on a stopped SparkContext``.
+        ``spark=None`` stores a session-free value (an on-disk path).
+
+        If a racing thread inserts a different session's build between our
+        eviction and ``memo_build``'s check, the evict-and-build cycle
+        RETRIES once (ADVICE r12 / VERDICT r13 #1): the single-build
+        contract holds after a session swap. Eviction is not poisoning: the
+        foreign caller already holds its value via ``memo_build``'s local
+        binding. Only a PERSISTENT foreign racer (a second live session
+        hammering the same key — not a real deployment shape) exhausts the
+        retry and falls back to one bounded private rebuild."""
+
+        def trim() -> None:
+            while len(self.memo) > self.cap:
+                self.memo.pop(next(iter(self.memo)))
+
+        event = "build"
+        for _attempt in (1, 2):
+            with self.lock:
+                cur = self.memo.get(key)
+                if cur is not None and cur[0] is not spark:
+                    self.memo.pop(key, None)
+                    event = "rebuild"
+            entry = memo_build(
+                self.lock,
+                self.memo,
+                key,
+                self._logged(key, lambda: (spark, build()), event),
+                locks=self.locks,
+                trim=trim,
+            )
+            if entry[0] is spark:
+                return entry[1]
+        return self._logged(key, build, "rebuild")()
+
+
+#: Every memo family, in release order: a family whose builds run another
+#: family's builds inside them (a simhash handle build runs a dedup stage
+#: build) comes AFTER it, so its clear lands last.
+FAMILIES = {
+    f.name: f
+    for f in (
+        # near-dedup stage artifacts per corpus (gram tables, LSH pairs,
+        # CC labels, simhash tables, span windows/sets, decontam grams);
+        # one corpus registers up to four frames (bigram grams, recall
+        # sample, 5-gram grams, simhash banded), hence the larger cap
+        MemoFamily("dedup", 16, "plan", ("dedup", "all")),
+        # (session, sf_dir) -> span window-hash PLAN: building it reads
+        # parquet footers (a Spark job), so the plan object is cached
+        MemoFamily("span_plan", 16, "key", ("dedup", "all")),
+        # sf_dir -> (dedup corpus dict, banded simhash table): skips the
+        # ~1.7 s JVM canonicalization of the banded plan per lookup
+        MemoFamily(
+            "simhash_handle", 4, "key", ("dedup", "all"), quiesce=True
+        ),
+        # ANN index structures per embedding corpus (IVF cell rankings,
+        # RP-LSH buckets, SQ8 stats, PQ codebook + encoded corpus, the
+        # recall harness top-k tables)
+        MemoFamily("ann", 4, "plan", ("ann", "all")),
+        # inverted index + charlm bigram counts per corpus
+        MemoFamily("search", 4, "plan", ("all",)),
+        # sf_dir -> trained BPE (merges, final state)
+        MemoFamily("bpe", 4, "key", ("all",)),
+        # sf_dir -> trained logreg (features, weights)
+        MemoFamily("ml", 4, "key", ("all",)),
+        # ("ivf_index", sf_dir) -> on-disk IVF index path: holds no JVM
+        # memory, so no release scope drops it
+        MemoFamily("knn_index", 4, "key", ()),
+    )
+}
+DEDUP, SPAN_PLAN, SIMHASH_HANDLE, ANN, SEARCH, BPE, ML, KNN_INDEX = (
+    FAMILIES.values()
+)
 
 
 def overlap_fills(*thunks):
@@ -259,6 +444,8 @@ def _artifact_path(key_df: "DataFrame", name: str) -> "str | None":
     if not base:
         return None
     _require_classic(key_df, "durable artifact mode")
+    for frame in getattr(_OPEN_BUILDS, "stack", ()):
+        frame[0] = True  # the open builds' log records say "durable"
     return f"{base.rstrip('/')}/{name}-{artifact_key(key_df)}"
 
 

@@ -58,35 +58,16 @@ if TYPE_CHECKING:
 
 BPE_MERGES = 8
 
-#: sf_dir -> (session, (merges_df, final_state_df)), both
-#: localCheckpointed — training runs once per corpus and serves both the
-#: merge-table query and the encode/compression query (the same reuse
-#: contract as similarity's ``_ANN_MEMO``; entries assume static input
-#: files and live executors). Session-guarded via
-#: ``_memo.corpus_memo_build``: a hit bound to a replaced SparkSession
-#: is evicted and retrained, never served (checkpoint-RDD-backed frames
-#: raise on any action once their session's context stops).
-_BPE_MEMO: dict[str, tuple] = {}
-_BPE_MEMO_LOCK = __import__("threading").Lock()
-_BPE_BUILD_LOCKS: dict[str, object] = {}
-
 
 def _trained(spark: "SparkSession", sf_dir: str):
-    # per-corpus locked check-and-insert via the shared corpus_memo_build:
-    # two driver threads racing on ONE corpus share a single expensive
-    # _train instead of silently discarding one result, while different
-    # corpora train concurrently; the separate lock registry keeps the
-    # LRU trim from counting or dropping locks.
-    from ._memo import corpus_memo_build
+    """(merges_df, final_state_df) for the corpus, trained once per
+    session in ``_memo.BPE``: training serves both the merge-table query
+    and the encode/compression query; racing threads share one ``_train``
+    and a hit bound to a replaced SparkSession is retrained, never served
+    (checkpoint-RDD-backed frames die with their session's context)."""
+    from ._memo import BPE
 
-    return corpus_memo_build(
-        _BPE_MEMO_LOCK,
-        _BPE_MEMO,
-        _BPE_BUILD_LOCKS,
-        spark,
-        sf_dir,
-        lambda: _train(spark, sf_dir),
-    )
+    return BPE.get(spark, sf_dir, lambda: _train(spark, sf_dir))
 
 
 def bpe_train(spark: "SparkSession", sf_dir: str) -> "DataFrame":

@@ -45,6 +45,8 @@ from ..functions import (
     whitespace_tokens,
     word_ngrams,
 )
+from ._memo import ARTIFACTS_DIR_CONF  # noqa: F401  (tests import it here)
+from ._memo import DEDUP, SIMHASH_HANDLE, SPAN_PLAN
 
 if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame, SparkSession
@@ -487,102 +489,17 @@ def jaccard_verify(grams: "DataFrame", candidates: "DataFrame") -> "DataFrame":
     )
 
 
-#: (grams_src_df, {stage_key: checkpointed_df}) — memoized near-dedup
-#: pipeline stages per corpus, matched by plan semantics (the
-#: ``_ANN_MEMO`` pattern from ``operators.similarity``). The verified
-#: pair set and the component labels are the expensive, reused artifacts:
-#: four registered queries (lsh_jaccard, duplicate_clusters, twophase,
-#: cluster_keep_best) plus the composed training-corpus pipeline all derive
-#: from them, and the CC label map costs an iterative driver-controlled
-#: loop that should run once per corpus, not once per caller. At production
-#: scale these ARE the persisted signature/cluster tables a pipeline writes
-#: between stages. Same caveat as the PQ cache: entries assume static input
-#: files and live executors; bounded to the last few corpora. The
-#: live-executors caveat disappears in durable artifact mode
-#: (``ARTIFACTS_DIR_CONF``): artifacts become write-once parquet tables.
-_DEDUP_MEMO: list = []
-_DEDUP_MEMO_LOCK = __import__("threading").Lock()
-
-
-def _dedup_stage_memo(grams: "DataFrame") -> dict:
-    # locked check-then-append (the _ANN_MEMO convention): concurrent
-    # driver threads must not register two memo dicts for one corpus
-    with _DEDUP_MEMO_LOCK:
-        for src, memo in _DEDUP_MEMO:
-            if (
-                src.sparkSession is grams.sparkSession
-                and grams.sameSemantics(src)
-            ):
-                return memo
-        memo: dict = {}
-        _DEDUP_MEMO.append((grams, memo))
-        # up to four entry classes per corpus (bigram near-dup grams,
-        # sampled recall grams, 5-gram decontam grams, simhash banded)
-        # -> keep the last few corpora
-        del _DEDUP_MEMO[:-16]
-        return memo
-
-
-def _dedup_memo_build(
-    memo: dict, key, build: "Callable[[], DataFrame]"
-) -> "DataFrame":
-    """Per-key locked check-and-insert (same contract as
-    ``similarity._memo_build``; shared implementation in
-    ``_memo.memo_build``): two threads wanting the same expensive stage
-    artifact (the quadratic pairwise kernel, the CC label map) share ONE
-    build instead of racing to build it twice and discarding one."""
-    from ._memo import memo_build
-
-    return memo_build(_DEDUP_MEMO_LOCK, memo, key, build)
-
-
-# The artifact layer (ARTIFACTS_DIR_CONF, the serialized checkpoint level,
-# durable parquet publish) moved to ``_memo`` in round 12 so the ANN and
-# BPE memos share it (VERDICT r11 ask #5); these aliases keep dedup the
-# documented entry point for the dedup memo family. The A/B-able storage
-# level global lives in ``_memo._CHECKPOINT_STORAGE`` now.
-from ._memo import ARTIFACTS_DIR_CONF  # noqa: E402  (re-export)
-from ._memo import local_checkpoint as _local_checkpoint  # noqa: E402
-from ._memo import artifact_key as _artifact_key  # noqa: E402
-from ._memo import materialize as _materialize  # noqa: E402
-
-
-def _memo_src(memo: dict) -> "DataFrame | None":
-    """The PURE corpus plan that registered ``memo`` in ``_DEDUP_MEMO`` —
-    the stable identity durable artifacts are keyed by (materialized
-    artifacts embed checkpoint RDD ids / read-back paths in their own
-    plans, which differ across sessions)."""
-    with _DEDUP_MEMO_LOCK:
-        for src, m in _DEDUP_MEMO:
-            if m is memo:
-                return src
-    return None
-
-
-def _dedup_memo_artifact(
-    memo: dict, key: str, build_plan: "Callable[[], DataFrame]"
-) -> "DataFrame":
-    """Memoized MATERIALIZED artifact: ``build_plan``'s result goes
-    through :func:`_materialize` (localCheckpoint, or durable parquet
-    under ``ARTIFACTS_DIR_CONF``), keyed on disk by the memo's pure
-    corpus plan + the memo key.
-
-    A committed durable artifact is probed BEFORE ``build_plan`` runs
-    (r12): a build that does eager driver-side work — the iterative
-    connected-components loop is the dedup case — would otherwise
-    execute in full on a refill, with ``_materialize``'s skip-to-read
-    only sparing the final write."""
-    from ._memo import read_artifact
-
-    def build() -> "DataFrame":
-        src = _memo_src(memo)
-        if src is not None:
-            art = read_artifact(src, key)
-            if art is not None:
-                return art
-        return _materialize(build_plan(), key, src)
-
-    return _dedup_memo_build(memo, key, build)
+# The near-dedup stage artifacts live in the ``_memo.DEDUP`` family,
+# one dict per corpus matched by plan semantics. The verified pair set
+# and the component labels are the expensive, reused artifacts: four
+# registered queries (lsh_jaccard, duplicate_clusters, twophase,
+# cluster_keep_best) plus the composed training-corpus pipeline all derive
+# from them, and the CC label map costs an iterative driver-controlled
+# loop that should run once per corpus, not once per caller. At production
+# scale these ARE the persisted signature/cluster tables a pipeline writes
+# between stages. Entries assume static input files and live executors;
+# the live-executors caveat disappears in durable artifact mode
+# (``ARTIFACTS_DIR_CONF``): artifacts become write-once parquet tables.
 
 
 def _decontam_grams(spark: "SparkSession", sf_dir: str) -> "DataFrame":
@@ -595,8 +512,8 @@ def _decontam_grams(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     table once at sf0.1 (~14s -> ~3.7s). At production scale this is the
     persisted signature table next to the corpus."""
     grams = _ngrams_df(spark, sf_dir, DECONTAM_NGRAM)
-    memo = _dedup_stage_memo(grams)
-    return _dedup_memo_artifact(memo, "materialized", lambda: grams)
+    memo = DEDUP.corpus(grams)
+    return DEDUP.artifact(memo, "materialized", lambda: grams)
 
 
 def _decontam_eval_hv(spark: "SparkSession", sf_dir: str) -> "DataFrame":
@@ -615,13 +532,13 @@ def _decontam_eval_hv(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     from pyspark.sql import functions as F
 
     grams_plan = _ngrams_df(spark, sf_dir, DECONTAM_NGRAM)
-    memo = _dedup_stage_memo(grams_plan)
-    mat = _dedup_memo_artifact(memo, "materialized", lambda: grams_plan)
+    memo = DEDUP.corpus(grams_plan)
+    mat = DEDUP.artifact(memo, "materialized", lambda: grams_plan)
     # DECONTAM_EVAL_MOD is part of the artifact NAME (ADVICE r19): the
     # durable on-disk key is (corpus plan, name), so a constant change
     # must force a rebuild instead of silently serving a stale eval set
     # from a prior build's ARTIFACTS_DIR.
-    return _dedup_memo_artifact(
+    return DEDUP.artifact(
         memo,
         f"eval_hv_m{DECONTAM_EVAL_MOD}",
         lambda: (
@@ -648,8 +565,8 @@ def _materialized_grams(grams: "DataFrame") -> "DataFrame":
     ``_decontam_grams``: at production scale this IS the persisted
     signature table a pipeline writes next to the corpus. Keyed by the
     RAW plan's semantics, so durable artifact keys stay session-stable."""
-    memo = _dedup_stage_memo(grams)
-    return _dedup_memo_artifact(memo, "materialized", lambda: grams)
+    memo = DEDUP.corpus(grams)
+    return DEDUP.artifact(memo, "materialized", lambda: grams)
 
 
 def _verified_pairs(grams: "DataFrame") -> "DataFrame":
@@ -665,8 +582,8 @@ def _verified_pairs(grams: "DataFrame") -> "DataFrame":
         mat = _materialized_grams(grams)
         return jaccard_verify(mat, minhash_lsh_candidates(mat))
 
-    memo = _dedup_stage_memo(grams)
-    return _dedup_memo_artifact(memo, "verified", build)
+    memo = DEDUP.corpus(grams)
+    return DEDUP.artifact(memo, "verified", build)
 
 
 def _memoized_pairwise(grams: "DataFrame") -> "DataFrame":
@@ -681,8 +598,8 @@ def _memoized_pairwise(grams: "DataFrame") -> "DataFrame":
     def build() -> "DataFrame":
         return _pairwise_jaccard(_materialized_grams(grams))
 
-    memo = _dedup_stage_memo(grams)
-    return _dedup_memo_artifact(memo, "pairwise", build)
+    memo = DEDUP.corpus(grams)
+    return DEDUP.artifact(memo, "pairwise", build)
 
 
 def _duplicate_components(grams: "DataFrame", algorithm: str) -> "DataFrame":
@@ -697,37 +614,21 @@ def _duplicate_components(grams: "DataFrame", algorithm: str) -> "DataFrame":
     cluster table a pipeline writes between its dedup and split stages."""
     from pyspark.sql import functions as F
 
-    from ._memo import read_artifact
-
-    memo = _dedup_stage_memo(grams)
-
-    def build() -> "DataFrame":
-        # probe the committed durable artifact BEFORE building — the
-        # exact refill case _dedup_memo_artifact's probe exists for
-        # (its docstring names this loop): without it, a fresh session
-        # under ARTIFACTS_DIR_CONF re-runs the whole iterative CC loop
-        # (one driver-side action per round) only for _materialize's
-        # skip-to-read to discard the freshly computed labels. Not
-        # routed through _dedup_memo_artifact because this memo entry
-        # is keyed by the ("components", algorithm) tuple while the
-        # on-disk name is the flat string.
-        src = _memo_src(memo)
-        if src is not None:
-            art = read_artifact(src, f"components_{algorithm}")
-            if art is not None:
-                return art
+    def build_plan() -> "DataFrame":
         pairs = (
             _verified_pairs(grams)
             .where(F.col("jaccard") >= JACCARD_THRESHOLD)
             .select("d1", "d2")
         )
-        return _materialize(
-            connected_components(pairs, algorithm=algorithm),
-            f"components_{algorithm}",
-            src,
-        )
+        return connected_components(pairs, algorithm=algorithm)
 
-    return _dedup_memo_build(memo, ("components", algorithm), build)
+    # the artifact probe skips the whole CC loop on a durable refill
+    return DEDUP.artifact(
+        DEDUP.corpus(grams),
+        ("components", algorithm),
+        build_plan,
+        f"components_{algorithm}",
+    )
 
 
 def dedup_minhash_lsh(spark: "SparkSession", sf_dir: str) -> "DataFrame":
@@ -903,21 +804,6 @@ SIMHASH_N_BANDS = SIMHASH_MAX_HAMMING + 1  # 4 bands of 15 bits each
 SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_N_BANDS
 
 
-#: (session-guarded) sf_dir -> (memo, banded) handle front-cache for the
-#: simhash family. The stage-memo registry matches corpora by
-#: ``sameSemantics``, which canonicalizes BOTH plans in the JVM — and the
-#: banded plan embeds the 60-bit SWAR signature expression (20 aggregate
-#: lambdas of shift/mask algebra), whose canonicalization measures
-#: ~1.7 s PER LOOKUP at any data size. Every simhash-family consumer
-#: (signature query, pair join, triangles, pagerank) paid that on every
-#: call; the O(1) front-cache pays it once per (session, corpus). The
-#: durable artifact keys still derive from the registered constant-
-#: bearing plan, so code changes keep invalidating committed artifacts.
-_SIMHASH_HANDLE_MEMO: "dict[str, tuple]" = {}
-_SIMHASH_HANDLE_LOCK = __import__("threading").Lock()
-_SIMHASH_HANDLE_LOCKS: "dict[str, object]" = {}
-
-
 def _simhash_banded_artifact(
     spark: "SparkSession", sf_dir: str
 ) -> "tuple[dict, DataFrame]":
@@ -926,16 +812,19 @@ def _simhash_banded_artifact(
     full signature once per band row, so BOTH the pair join (all four
     band rows) and the signature query (``band_idx == 0``) read it —
     the signature computation (20 SWAR aggregate passes over the token
-    explode, ~2 s/call at sf0.1) runs once per corpus, not per caller."""
-    from ._memo import corpus_memo_build
+    explode, ~2 s/call at sf0.1) runs once per corpus, not per caller.
 
-    return corpus_memo_build(
-        _SIMHASH_HANDLE_LOCK,
-        _SIMHASH_HANDLE_MEMO,
-        _SIMHASH_HANDLE_LOCKS,
-        spark,
-        sf_dir,
-        lambda: _simhash_banded_build(spark, sf_dir),
+    The handle is front-cached per (session, sf_dir) in
+    ``_memo.SIMHASH_HANDLE``: the DEDUP family matches corpora by
+    ``sameSemantics``, which canonicalizes BOTH plans in the JVM — and
+    the banded plan embeds the 60-bit SWAR signature expression (20
+    aggregate lambdas of shift/mask algebra), whose canonicalization
+    measures ~1.7 s PER LOOKUP at any data size. The O(1) front-cache
+    pays it once per (session, corpus). The durable artifact keys still
+    derive from the registered constant-bearing plan, so code changes
+    keep invalidating committed artifacts."""
+    return SIMHASH_HANDLE.get(
+        spark, sf_dir, lambda: _simhash_banded_build(spark, sf_dir)
     )
 
 
@@ -979,8 +868,8 @@ def _simhash_banded_build(
     # memoized per corpus: dedup_simhash, dedup_simhash_pairs, and the two
     # graph queries all execute over the same documents table, and the
     # banded signature table is the expensive shared part
-    memo = _dedup_stage_memo(banded)
-    return memo, _dedup_memo_artifact(memo, "simhash_banded", lambda: banded)
+    memo = DEDUP.corpus(banded)
+    return memo, DEDUP.artifact(memo, "simhash_banded", lambda: banded)
 
 
 def _simhash_pairs_parts(
@@ -1058,7 +947,7 @@ def _simhash_pairs_artifact(
     both graph consumers (triangles, pagerank) so a key or
     materialization-policy change can never de-share the artifact."""
     memo, pairs = _simhash_pairs_parts(spark, sf_dir)
-    return memo, _dedup_memo_artifact(memo, "simhash_pairs", lambda: pairs)
+    return memo, DEDUP.artifact(memo, "simhash_pairs", lambda: pairs)
 
 
 DEDUP_SIMHASH_PAIRS_SQL = f"""
@@ -1214,7 +1103,7 @@ def graph_triangles(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     from pyspark.sql import functions as F
 
     memo, pairs = _simhash_pairs_artifact(spark, sf_dir)
-    oriented = _dedup_memo_artifact(
+    oriented = DEDUP.artifact(
         memo,
         "triangles_oriented",
         lambda: _orient_by_degree(pairs.select("d1", "d2")),
@@ -1375,7 +1264,7 @@ def lsh_recall(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     from pyspark.sql import functions as F
 
     sampled = _recall_sample_grams(spark, sf_dir)
-    memo = _dedup_stage_memo(sampled)
+    memo = DEDUP.corpus(sampled)
 
     def build_anchored() -> "DataFrame":
         # both kernel sides read the MATERIALIZED corpus gram artifact
@@ -1405,7 +1294,7 @@ def lsh_recall(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     from ._memo import overlap_fills
 
     ground_full, lsh_full = overlap_fills(
-        lambda: _dedup_memo_artifact(memo, "anchored", build_anchored),
+        lambda: DEDUP.artifact(memo, "anchored", build_anchored),
         lambda: dedup_lsh_jaccard(spark, sf_dir),
     )
     ground = ground_full.select("d1", "d2")
@@ -1504,35 +1393,23 @@ SPAN_HOT_ISIN_MAX = 2048
 SPAN_DETECT_FRACTION = 1.0 / 64
 
 
-#: (session, sf_dir, plan) cache for the span window-hash PLAN: the plan
-#: itself is lazy (no storage), but *building* it calls
-#: ``spark.read.parquet``, whose footer/schema read is a Spark job — and
-#: three call sites build it per :func:`dedup_repeated_spans` call. Caching
-#: the plan object makes the memoized construction path launch ZERO jobs
-#: (the eager-contract pin) and freezes the file listing at first read —
-#: the memo family's documented static-input assumption, now shared by the
-#: plan. Bounded like ``_DEDUP_MEMO``; cleared with it.
-_SPAN_PLAN_CACHE: dict = {}
-# build locks live OUTSIDE the cache (the bpe/knn convention): the trim
-# below and release_shared_caches both drop plain keys, and memo_build's
-# locks-in-memo default is only safe when nothing does that
-_SPAN_PLAN_LOCKS: dict = {}
-
-
 def _span_windows_plan(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """The positional SPAN_K-token window-hash PLAN behind
     :func:`dedup_repeated_spans`: one row per (doc_id, position) with the
     md5-derived 32-bit hash of the window starting there. Pure plan — the
     memo key and the single-documents-scan plan pin both need the
     un-materialized form; execution goes through :func:`_span_windows`.
-    Cached per (session, corpus dir) through the shared build-once helper
-    (``_memo.memo_build``): SparkSession defines no ``__eq__``, so the
-    dict key compares by identity, exactly the old list-scan semantics —
-    and two threads share ONE build instead of both paying the
-    ``read.parquet`` footer job the cache exists to avoid."""
-    from pyspark.sql import functions as F
 
-    from ._memo import memo_build
+    Cached per (session, corpus dir) in ``_memo.SPAN_PLAN``: the plan is
+    lazy (no storage), but *building* it calls ``spark.read.parquet``,
+    whose footer/schema read is a Spark job — and three call sites build
+    it per :func:`dedup_repeated_spans` call. The cached plan object makes
+    the memoized construction path launch ZERO jobs (the eager-contract
+    pin) and freezes the file listing at first read (the memo families'
+    static-input assumption). SparkSession defines no ``__eq__``, so the
+    key compares the session by identity, and two threads share ONE
+    build instead of both paying the footer job."""
+    from pyspark.sql import functions as F
 
     def build() -> "DataFrame":
         toks = (
@@ -1553,18 +1430,7 @@ def _span_windows_plan(spark: "SparkSession", sf_dir: str) -> "DataFrame":
             md5_long(F.col("gram"), 8).alias("h"),
         )
 
-    def trim() -> None:
-        while len(_SPAN_PLAN_CACHE) > 16:
-            _SPAN_PLAN_CACHE.pop(next(iter(_SPAN_PLAN_CACHE)))
-
-    return memo_build(
-        _DEDUP_MEMO_LOCK,
-        _SPAN_PLAN_CACHE,
-        (spark, sf_dir),
-        build,
-        locks=_SPAN_PLAN_LOCKS,
-        trim=trim,
-    )
+    return SPAN_PLAN.get(spark, (spark, sf_dir), build)
 
 
 def _span_windows(spark: "SparkSession", sf_dir: str) -> "DataFrame":
@@ -1582,8 +1448,8 @@ def _span_windows(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     signature table a substring-dedup pipeline writes next to the corpus
     (same argument as the 5-gram decontamination table)."""
     plan = _span_windows_plan(spark, sf_dir)
-    memo = _dedup_stage_memo(plan)
-    return _dedup_memo_artifact(memo, "span_windows", lambda: plan)
+    memo = DEDUP.corpus(plan)
+    return DEDUP.artifact(memo, "span_windows", lambda: plan)
 
 
 def _repeated_spans_artifact(spark: "SparkSession", sf_dir: str) -> "DataFrame":
@@ -1596,8 +1462,8 @@ def _repeated_spans_artifact(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     cross-document boilerplate, never corpus-sized, so the checkpoint is
     small; consumers (``docs_strip_repeated_spans``) broadcast it."""
     plan = _span_windows_plan(spark, sf_dir)
-    memo = _dedup_stage_memo(plan)
-    return _dedup_memo_artifact(
+    memo = DEDUP.corpus(plan)
+    return DEDUP.artifact(
         memo, "span_set", lambda: dedup_repeated_spans(spark, sf_dir)
     )
 
@@ -1651,7 +1517,7 @@ def _hot_span_hash_list(
     from pyspark.sql import functions as F
 
     plan = _span_windows_plan(spark, sf_dir)
-    memo = _dedup_stage_memo(plan)
+    memo = DEDUP.corpus(plan)
 
     def detect() -> list:
         wins = _span_windows(spark, sf_dir)
@@ -1666,7 +1532,7 @@ def _hot_span_hash_list(
             rows = _hot_span_hashes(wins, hot_count).collect()
         return sorted(r["h"] for r in rows)
 
-    return _dedup_memo_build(memo, ("span_hot", hot_count), detect)
+    return DEDUP.build(memo, ("span_hot", hot_count), detect)
 
 
 def dedup_repeated_spans(
@@ -1910,7 +1776,7 @@ def graph_pagerank(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     ).unionByName(
         pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst"))
     )
-    deg = _dedup_memo_artifact(
+    deg = DEDUP.artifact(
         memo,
         "pagerank_deg",
         lambda: edges.groupBy("src").agg(F.count("*").alias("deg")),
@@ -1929,7 +1795,7 @@ def graph_pagerank(spark: "SparkSession", sf_dir: str) -> "DataFrame":
         )
     # (src, dst, deg) — degree folded into the edge once, memoized;
     # every iteration (and every repeat call) reads the artifact
-    edges_deg = _dedup_memo_artifact(
+    edges_deg = DEDUP.artifact(
         memo, "pagerank_edges_deg", lambda: edges.join(deg, "src")
     )
     # int(x + 0.5) == SQL ROUND's round-half-away for positive x (Python's

@@ -33,9 +33,9 @@ oracle-checkable, like every similarity operator.
 
 from __future__ import annotations
 
-import threading
 from typing import TYPE_CHECKING, Callable
 
+from ._memo import KNN_INDEX
 from .similarity import (
     IVF_ASSIGN_CTES,
     N_CELLS,
@@ -370,23 +370,18 @@ def similarity_knn_join_ivf(spark: "SparkSession", sf_dir: str) -> "DataFrame":
 
 
 # On-disk index build for the registered serve query: one save per corpus
-# per session (the shared memo contract), written to a process-scoped temp
-# directory — the registered query must be rerunnable by the driver gate
-# and bench without re-scoring the corpus each call. Only the PATH is
-# memoized; the artifact itself lives on disk and holds no JVM memory, so
-# release_shared_caches deliberately leaves this memo alone. Every dir we
-# mkdtemp is recorded in _INDEX_DIRS and removed at interpreter exit
-# (atexit) — even ones orphaned by a memo clear — so repeated bench/test
-# runs don't accumulate corpus-sized parquet trees in /tmp (which is
-# commonly tmpfs, i.e. RAM).
-_INDEX_MEMO: dict = {}
-_INDEX_MEMO_LOCK = threading.Lock()
-# Build locks live OUTSIDE the memo (the bpe convention): _memo.memo_build's
-# locks-in-memo default is only safe when nothing pops lock entries, and
-# _cleanup_index_dirs clears the memo wholesale — a clear that also dropped
-# the per-key locks would let a concurrent caller start a duplicate build
-# while the first one's dir is being rmtree'd out from under it.
-_INDEX_BUILD_LOCKS: dict = {}
+# (the shared memo contract), written to a process-scoped temp directory —
+# the registered query must be rerunnable by the driver gate and bench
+# without re-scoring the corpus each call. Only the PATH is memoized, in
+# ``_memo.KNN_INDEX``; the artifact itself lives on disk and holds no JVM
+# memory, so no release_shared_caches scope drops it. Its build locks
+# live OUTSIDE the memo (``KNN_INDEX.locks``) and survive clears: a clear
+# that also dropped them would let a concurrent caller start a duplicate
+# build while the first one's dir is being rmtree'd out from under it.
+# Every dir we mkdtemp is recorded in _INDEX_DIRS and removed at
+# interpreter exit (atexit) — even ones orphaned by a memo clear or trim —
+# so repeated bench/test runs don't accumulate corpus-sized parquet trees
+# in /tmp (which is commonly tmpfs, i.e. RAM).
 _INDEX_DIRS: list = []
 
 
@@ -399,6 +394,11 @@ _INDEX_DIRS: list = []
 #: in-flight build may still be writing), leaving them to OS tmp reaping;
 #: dirs of completed builds are still deleted.
 _CLEANUP_LOCK_TIMEOUT_S = 10.0
+
+
+def _index_paths() -> dict:
+    """key -> index dir of every memoized build (call under the lock)."""
+    return {k: path for k, (_session, path) in KNN_INDEX.memo.items()}
 
 
 def _cleanup_index_dirs() -> None:
@@ -427,10 +427,10 @@ def _cleanup_index_dirs() -> None:
     import shutil
     import time
 
-    with _INDEX_MEMO_LOCK:
-        locks = dict(_INDEX_BUILD_LOCKS)
+    with KNN_INDEX.lock:
+        locks = dict(KNN_INDEX.locks)
         doomed = set(_INDEX_DIRS)
-        dir_key = {v: k for k, v in _INDEX_MEMO.items() if v in doomed}
+        dir_key = {v: k for k, v in _index_paths().items() if v in doomed}
     deadline = time.monotonic() + _CLEANUP_LOCK_TIMEOUT_S
     acquired: list = []
     blocked: set = set()
@@ -453,16 +453,16 @@ def _cleanup_index_dirs() -> None:
             # memo entry after the entry snapshot, and the stale map would
             # classify its finished dir 'unmapped' — skipped whenever any
             # OTHER key is blocked, leaking it to OS tmp reaping
-            with _INDEX_MEMO_LOCK:
+            with KNN_INDEX.lock:
                 dir_key = {
-                    v: k for k, v in _INDEX_MEMO.items() if v in doomed
+                    v: k for k, v in _index_paths().items() if v in doomed
                 }
             doomed = {
                 d for d in doomed if d in dir_key and dir_key[d] not in blocked
             }
-        with _INDEX_MEMO_LOCK:
-            for key in [k for k, v in _INDEX_MEMO.items() if v in doomed]:
-                del _INDEX_MEMO[key]
+        with KNN_INDEX.lock:
+            for key in [k for k, v in _index_paths().items() if v in doomed]:
+                del KNN_INDEX.memo[key]
             _INDEX_DIRS[:] = [d for d in _INDEX_DIRS if d not in doomed]
         for d in doomed:
             shutil.rmtree(d, ignore_errors=True)
@@ -488,15 +488,13 @@ def _seed_centroids(emb: "DataFrame") -> "DataFrame":
 def _served_index_path(spark: "SparkSession", sf_dir: str) -> str:
     import tempfile
 
-    from . import _memo
-
     def build() -> str:
         import atexit
 
         from pyspark.sql import functions as F
 
         path = tempfile.mkdtemp(prefix="polarify_spark_ivf_index_")
-        with _INDEX_MEMO_LOCK:
+        with KNN_INDEX.lock:
             # register exactly once per process; the emptiness test broke
             # after the first cleanup (tests call it directly) and stacked
             # duplicate atexit entries
@@ -511,13 +509,8 @@ def _served_index_path(spark: "SparkSession", sf_dir: str) -> str:
         save_ivf_index(emb.where(~in_q), _seed_centroids(emb), path)
         return path
 
-    return _memo.memo_build(
-        _INDEX_MEMO_LOCK,
-        _INDEX_MEMO,
-        ("ivf_index", sf_dir),
-        build,
-        locks=_INDEX_BUILD_LOCKS,
-    )
+    # session-free (None): the parquet index serves any session
+    return KNN_INDEX.get(None, ("ivf_index", sf_dir), build)
 
 
 def similarity_knn_index_serve(

@@ -40,31 +40,19 @@ if TYPE_CHECKING:
 LOGREG_ITERS = 12
 LOGREG_LR = 8.0
 
-#: sf_dir -> (session, (features_df, trained_weights_df)) — the trained
-#: model is a per-corpus artifact (deterministic: exact integer
-#: gradients, fixed iteration count), built once per session like the
-#: BPE merge table and the k-means centroids, not re-trained per scoring
-#: call. Session-guarded via ``_memo.corpus_memo_build`` (a hit bound to
-#: a replaced SparkSession is evicted, not served). Cleared by
-#: ``operators.release_shared_caches`` (scope "all"); durable-mode
-#: eligible (`spark.polarify.artifacts.dir` — the model file a trainer
-#: writes next to the corpus).
-_ML_MEMO: "dict[str, tuple]" = {}
-_ML_MEMO_LOCK = __import__("threading").Lock()
-_ML_BUILD_LOCKS: "dict[str, object]" = {}
-
 
 def _trained(spark: "SparkSession", sf_dir: str) -> tuple:
-    from ._memo import corpus_memo_build
+    """(features_df, trained_weights_df): the trained model is a
+    per-corpus artifact (deterministic: exact integer gradients, fixed
+    iteration count), built once per session in ``_memo.ML`` like the BPE
+    merge table, not re-trained per scoring call. A hit bound to a
+    replaced SparkSession is retrained, not served; durable-mode eligible
+    (``spark.polarify.artifacts.dir`` — the model file a trainer writes
+    next to the corpus)."""
+    from ._memo import ML
 
-    return corpus_memo_build(
-        _ML_MEMO_LOCK,
-        _ML_MEMO,
-        _ML_BUILD_LOCKS,
-        spark,
-        sf_dir,
-        lambda: _train(spark, sf_dir),
-    )
+    return ML.get(spark, sf_dir, lambda: _train(spark, sf_dir))
+
 
 #: feature scaling keeps z in a well-conditioned range without data-dependent
 #: normalization (which would need an extra pass + exact-portability care).
@@ -125,7 +113,7 @@ FEATURES_SQL = r"""
 def logreg_quality(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """Score every document under the per-corpus trained classifier:
     (doc_id, y, prob, pred). Training (see :func:`_train`) runs once per
-    corpus per session through ``_ML_MEMO`` — repeat calls are a single
+    corpus per session through ``_memo.ML`` — repeat calls are a single
     broadcast-join scoring pass over the materialized feature table."""
     from pyspark.sql import functions as F
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from typing import TYPE_CHECKING, Callable
 
 from ..functions import whitespace_tokens
+from ._memo import SEARCH
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -46,41 +47,14 @@ def _docs(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-#: per-corpus memo of the search family's expensive, reused artifacts —
-#: the inverted index (``tf``: bm25 AND hybrid-RRF probe it) and the
-#: charlm per-document bigram counts. Same contract and lifecycle as
-#: ``similarity._ANN_MEMO`` / ``dedup._DEDUP_MEMO``: entries are keyed by
-#: corpus plan semantics, built once per corpus per session (or read from
-#: the durable artifact dir when ``ARTIFACTS_DIR_CONF`` is set), assume
-#: static input files, bounded to the last few corpora, and cleared by
-#: ``operators.release_shared_caches``. At production scale these ARE the
-#: persisted index tables a search service keeps next to the corpus.
-_SEARCH_MEMO: "list[tuple[DataFrame, dict]]" = []
-_SEARCH_MEMO_LOCK = __import__("threading").Lock()
-
-
-def _search_stage_memo(docs: "DataFrame") -> dict:
-    # locked check-then-append (the _ANN_MEMO convention): concurrent
-    # driver threads must not register two memo dicts for one corpus
-    with _SEARCH_MEMO_LOCK:
-        for src, memo in _SEARCH_MEMO:
-            if src.sparkSession is docs.sparkSession and docs.sameSemantics(
-                src
-            ):
-                return memo
-        memo: dict = {}
-        _SEARCH_MEMO.append((docs, memo))
-        del _SEARCH_MEMO[:-4]
-        return memo
-
-
-def _search_memo_build(memo: dict, key, build) -> "DataFrame":
-    """Per-key locked check-and-insert (shared implementation in
-    ``_memo.memo_build``): two threads wanting the same index artifact
-    share ONE build instead of racing to build it twice."""
-    from ._memo import memo_build
-
-    return memo_build(_SEARCH_MEMO_LOCK, memo, key, build)
+# The search family's expensive, reused artifacts — the inverted index
+# (``tf``: bm25 AND hybrid-RRF probe it) and the charlm per-document
+# bigram counts — live in the ``_memo.SEARCH`` family: one dict per
+# corpus matched by plan semantics, built once per corpus per session (or
+# read from the durable artifact dir when ``ARTIFACTS_DIR_CONF`` is set),
+# static input files assumed, bounded to the last few corpora, cleared by
+# ``operators.release_shared_caches``. At production scale these ARE the
+# persisted index tables a search service keeps next to the corpus.
 
 
 def _tf_table(spark: "SparkSession", sf_dir: str) -> "DataFrame":
@@ -97,7 +71,7 @@ def _tf_table(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     from ._memo import materialize
 
     docs = _docs(spark, sf_dir)
-    memo = _search_stage_memo(docs)
+    memo = SEARCH.corpus(docs)
 
     def build() -> "DataFrame":
         toks = docs.select(
@@ -107,7 +81,7 @@ def _tf_table(spark: "SparkSession", sf_dir: str) -> "DataFrame":
         tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
         return materialize(tf, "search_tf")
 
-    return _search_memo_build(memo, "tf", build)
+    return SEARCH.build(memo, "tf", build)
 
 
 def _query_terms_df(spark: "SparkSession") -> "DataFrame":
@@ -262,7 +236,7 @@ def charlm_quality(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     from ._memo import materialize
 
     corpus = _docs(spark, sf_dir)
-    memo = _search_stage_memo(corpus)
+    memo = SEARCH.corpus(corpus)
 
     def build() -> "DataFrame":
         # guard: Spark's sequence(1, 0) would run *descending*; DuckDB's
@@ -294,7 +268,7 @@ def charlm_quality(spark: "SparkSession", sf_dir: str) -> "DataFrame":
         )
         return materialize(per_doc, "charlm_bigrams")
 
-    per_doc = _search_memo_build(memo, "charlm_per_doc", build)
+    per_doc = SEARCH.build(memo, "charlm_per_doc", build)
     model = per_doc.groupBy("bigram").agg(F.sum("n").alias("c_bigram"))
     prefix = model.select(
         F.substring("bigram", 1, 1).alias("prefix"), "c_bigram"

@@ -43,6 +43,7 @@ from __future__ import annotations
 from typing import TYPE_CHECKING, Callable
 
 from ..functions import md5_top_n_ids_sql
+from ._memo import ANN
 
 if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame, SparkSession
@@ -205,8 +206,8 @@ def _cell_ranked(
     # storage-level measurements in SCALE.md r11 were about (r18 audit)
     from ._memo import local_checkpoint
 
-    memo = _ann_index_memo(emb)
-    return _memo_build(memo, "cell_ranked", lambda: local_checkpoint(scored))
+    memo = ANN.corpus(emb)
+    return ANN.build(memo, "cell_ranked", lambda: local_checkpoint(scored))
 
 
 def _cell_assignment(
@@ -425,8 +426,8 @@ def _bucketed(
     from ._memo import local_checkpoint
 
     emb = _emb(spark, sf_dir) if emb is None else emb
-    memo = _ann_index_memo(emb)
-    return _memo_build(
+    memo = ANN.corpus(emb)
+    return ANN.build(
         memo,
         "rplsh_bucketed",
         lambda: local_checkpoint(
@@ -676,8 +677,8 @@ def _multitable_bucketed(
     from ._memo import local_checkpoint
 
     emb = _emb(spark, sf_dir) if emb is None else emb
-    memo = _ann_index_memo(emb)
-    return _memo_build(
+    memo = ANN.corpus(emb)
+    return ANN.build(
         memo,
         "rplsh_multitable",
         # serialized checkpoint: N_TABLES x corpus rows with embeddings
@@ -876,10 +877,8 @@ def topk_sq8(
     emb = _emb(spark, sf_dir) if emb is None else emb
     # one row; memoized + checkpointed so the min/max corpus pass runs once
     # per corpus and isn't re-run for the second crossJoin branch (dequant)
-    memo = _ann_index_memo(emb)
-    stats = _ann_memo_artifact(
-        memo, "sq8_stats", "sq8_stats", lambda: _sq8_stats(emb)
-    )
+    memo = ANN.corpus(emb)
+    stats = ANN.artifact(memo, "sq8_stats", lambda: _sq8_stats(emb))
     codes = _sq8_codes(emb, stats)
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -1068,12 +1067,12 @@ def _pq_codebook(emb: "DataFrame", n_iter: int = PQ_ITERS) -> "DataFrame":
     driver-controlled iterative loop — the exact artifact class that an
     executor loss or session end should not force a retrain of — so under
     ``spark.polarify.artifacts.dir`` it becomes a durable parquet table."""
-    memo = _ann_index_memo(emb)
-    return _ann_memo_artifact(
+    memo = ANN.corpus(emb)
+    return ANN.artifact(
         memo,
         ("pq_codebook", n_iter),
-        f"pq_codebook{n_iter}",
         lambda: _pq_codebook_train(emb, n_iter, memo),
+        f"pq_codebook{n_iter}",
     )
 
 
@@ -1104,7 +1103,7 @@ def _pq_codebook_train(
     # NOT from the full-corpus subvector expansion, so training never
     # waits on (or forces) that much larger materialization; lazy so the
     # first round's job materializes it without an extra barrier
-    train = _memo_build(
+    train = ANN.build(
         memo,
         "pq_train_subvectors",
         lambda: _pq_subvectors(
@@ -1155,86 +1154,6 @@ def _pq_codebook_train(
     return cb
 
 
-#: (emb_src_df, {index_key: checkpointed_df}) — memoized ANN index
-#: structures per corpus, matched by plan semantics. Every index family's
-#: expensive derived artifact lives here (IVF cell rankings, RP-LSH bucket
-#: tables, SQ8 stats/codes, the PQ-dequantized corpus), so the standalone
-#: top-k queries and both recall harnesses build each structure once per
-#: corpus and the iterative/trained builds never re-run per caller. At
-#: production scale these ARE the persisted index tables an ANN service
-#: keeps next to the corpus. Entries assume static input files and live
-#: executors (see the module docstring's cache caveat); bounded to the
-#: last few corpora a session touches.
-_ANN_MEMO: "list[tuple[DataFrame, dict]]" = []
-_ANN_MEMO_LOCK = __import__("threading").Lock()
-
-
-def _ann_index_memo(emb: "DataFrame") -> dict:
-    # locked: the concurrent top-k paths populate different keys of the
-    # same memo from driver threads, and an unlocked check-then-append
-    # could register two dicts for one corpus (later lookups would then
-    # miss half the built structures)
-    with _ANN_MEMO_LOCK:
-        for src, memo in _ANN_MEMO:
-            if src.sparkSession is emb.sparkSession and emb.sameSemantics(src):
-                return memo
-        memo: dict = {}
-        _ANN_MEMO.append((emb, memo))
-        del _ANN_MEMO[:-4]
-        return memo
-
-
-def _memo_build(memo: dict, key, build: "Callable[[], DataFrame]") -> "DataFrame":
-    """Per-key locked check-and-insert into an index memo: the recall
-    harness launches every top-k path concurrently (no prebuild barrier —
-    the fast paths would otherwise idle behind the PQ training chain), and
-    two paths needing the same structure (e.g. probe-1 and probe-2 both on
-    ``cell_ranked``) must share ONE expensive build, not race to build it
-    twice and drop one. (Shared implementation: ``_memo.memo_build``.)"""
-    from ._memo import memo_build
-
-    return memo_build(_ANN_MEMO_LOCK, memo, key, build)
-
-
-def _ann_memo_src(memo: dict) -> "DataFrame | None":
-    """The PURE embedding plan that registered ``memo`` in ``_ANN_MEMO``
-    — the stable identity durable artifacts are keyed by (the dedup
-    ``_memo_src`` convention: materialized artifacts embed checkpoint RDD
-    ids in their own plans, which differ across sessions)."""
-    with _ANN_MEMO_LOCK:
-        for src, m in _ANN_MEMO:
-            if m is memo:
-                return src
-    return None
-
-
-def _ann_memo_artifact(
-    memo: dict, key, name: str, build_plan: "Callable[[], DataFrame]"
-) -> "DataFrame":
-    """Memoized MATERIALIZED index artifact (VERDICT r11 ask #5):
-    ``build_plan``'s result goes through :func:`_memo.materialize` —
-    eager localCheckpoint by default, or a write-once durable parquet
-    table under ``spark.polarify.artifacts.dir`` keyed by the memo's
-    pure corpus plan. The trained/iterative ANN structures (PQ codebook,
-    SQ8 stats, the PQ-encoded corpus) are exactly the artifacts worth
-    surviving executor loss: each costs a driver-controlled loop or a
-    full corpus pass, and at production scale they ARE the index files
-    a serving tier ships. A committed artifact is probed BEFORE
-    ``build_plan`` runs, so a refill session reads the index instead of
-    re-running the training loop's eager per-round checkpoints."""
-    from ._memo import materialize, read_artifact
-
-    def build() -> "DataFrame":
-        src = _ann_memo_src(memo)
-        if src is not None:
-            art = read_artifact(src, name)
-            if art is not None:
-                return art
-        return materialize(build_plan(), name, src)
-
-    return _memo_build(memo, key, build)
-
-
 def _pq_dequantized(emb: "DataFrame") -> "DataFrame":
     """(vec_id, dq_vec): each corpus vector PQ-encoded then decoded — the
     vector the index actually scores against.
@@ -1255,7 +1174,7 @@ def _pq_dequantized(emb: "DataFrame") -> "DataFrame":
     re-runs the K x M encode expansion."""
     from pyspark.sql import functions as F
 
-    memo = _ann_index_memo(emb)
+    memo = ANN.corpus(emb)
 
     def build() -> "DataFrame":
         cb = _pq_codebook(emb)  # trains on its own bounded sample table
@@ -1263,7 +1182,7 @@ def _pq_dequantized(emb: "DataFrame") -> "DataFrame":
         # training loop deliberately never touches it — its sample table
         # is bounded and separate); lazy so the encode job materializes
         # it without an extra barrier
-        subs = _memo_build(
+        subs = ANN.build(
             memo,
             "pq_subvectors",
             lambda: _pq_subvectors(emb).localCheckpoint(eager=False),
@@ -1312,7 +1231,7 @@ def _pq_dequantized(emb: "DataFrame") -> "DataFrame":
     # materialized via the shared artifact layer: the encoded corpus IS
     # the PQ index — under the durable conf it becomes the on-disk index
     # file a serving tier would ship (VERDICT r11 ask #5)
-    return _ann_memo_artifact(memo, "pq_dequantized", "pq_dequantized", build)
+    return ANN.artifact(memo, "pq_dequantized", build)
 
 
 def topk_pq(
@@ -1646,7 +1565,7 @@ def _materialized_hits(
     real plan, not a checkpoint scan.
 
     There is deliberately NO prebuild barrier: each path builds the index
-    structures it needs on demand, deduplicated by ``_memo_build``'s
+    structures it needs on demand, deduplicated by ``ANN.build``'s
     per-key locks — the baseline (`bf`) is one such shared build, so every
     path's hit join waits on exactly one bruteforce scan, and the harness
     wall is ~max(path chain), not (all builds) + (all queries).
@@ -1660,7 +1579,7 @@ def _materialized_hits(
 
     from pyspark.sql import functions as F
 
-    memo = _ann_index_memo(emb)
+    memo = ANN.corpus(emb)
 
     def topk_of(label: str, fn: "Callable") -> "DataFrame":
         # repartition(1) before the checkpoint: the result is bounded
@@ -1669,7 +1588,7 @@ def _materialized_hits(
         # compare job schedules |paths| x 32 near-empty tasks just to
         # read ~80-row tables. (repartition, not coalesce: coalesce
         # would collapse the path's upstream stages to one task.)
-        return _memo_build(
+        return ANN.build(
             memo,
             ("topk", label),
             lambda: fn(spark, sf_dir, emb)
@@ -1684,7 +1603,7 @@ def _materialized_hits(
         # the distinct query ids of the exact baseline — the rows every
         # method's recall table must cover (a query an index missed
         # entirely reports recall 0 instead of vanishing)
-        return _memo_build(
+        return ANN.build(
             memo,
             "recall_q_grid",
             lambda: bf()
@@ -1724,7 +1643,7 @@ def _materialized_hits(
                 .localCheckpoint(eager=True)
             )
 
-        return label, _memo_build(memo, ("hits", label), build)
+        return label, ANN.build(memo, ("hits", label), build)
 
     def prewarm_pq_subvectors() -> "DataFrame":
         # the full-corpus subvector expansion is the PQ ENCODE's input but
@@ -1733,7 +1652,7 @@ def _materialized_hits(
         # chain) this removes the expansion's cost from the serial tail.
         # Same memo key as _pq_dequantized's lazy registration: whichever
         # side arrives first builds, the per-key lock dedupes.
-        return _memo_build(
+        return ANN.build(
             memo,
             "pq_subvectors",
             lambda: _pq_subvectors(emb).localCheckpoint(eager=True),

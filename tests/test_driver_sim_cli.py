@@ -44,13 +44,26 @@ def test_unknown_query_name_exits_nonzero():
 
 
 def test_bench_knn_index_memo_contract():
-    # bench.py's pass-2 release clears knn._INDEX_MEMO directly (the
+    # bench.py's pass-2 release clears the knn_index family by hand (the
     # path memo deliberately survives release_shared_caches) — pin the
-    # names it reaches for so a knn refactor breaks loudly here, not
-    # silently in the next round's band semantics
+    # family it reaches for, and that its clear drops the paths but keeps
+    # the build locks, so a knn refactor breaks loudly here, not silently
+    # in the next round's band semantics
     import threading
 
     from polarify_spark.operators import knn
+    from polarify_spark.operators._memo import FAMILIES
 
-    assert isinstance(knn._INDEX_MEMO, dict)
-    assert isinstance(knn._INDEX_MEMO_LOCK, type(threading.Lock()))
+    fam = FAMILIES["knn_index"]
+    assert fam is knn.KNN_INDEX and fam.scopes == ()
+    assert 'FAMILIES["knn_index"].clear()' in (REPO / "bench.py").read_text()
+    key = ("probe", "bench-contract")
+    saved = dict(fam.memo)
+    fam.locks[key] = threading.Lock()
+    fam.memo[key] = (None, "/nonexistent/index")
+    try:
+        fam.clear()
+        assert fam.memo == {} and key in fam.locks
+    finally:
+        fam.locks.pop(key, None)
+        fam.memo.update(saved)

@@ -847,10 +847,8 @@ def test_artifact_key_stable_across_plan_instances(spark, tmp_path):
     over the same inputs produce the SAME key: expression ids must
     canonicalize away. Also pins that a different corpus (different
     input path) can never collide into the same artifact."""
-    from polarify_spark.operators.dedup import (
-        _artifact_key,
-        _span_windows_plan,
-    )
+    from polarify_spark.operators._memo import artifact_key as _artifact_key
+    from polarify_spark.operators.dedup import _span_windows_plan
 
     docs = spark.createDataFrame(
         [(1, "a b c d e f g h i j")], "doc_id long, text string"
@@ -905,9 +903,9 @@ def test_durable_artifact_stale_partial_is_rebuilt(spark, tmp_path):
     import os
 
     from polarify_spark.operators import release_shared_caches
+    from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF
+    from polarify_spark.operators._memo import artifact_key as _artifact_key
     from polarify_spark.operators.dedup import (
-        ARTIFACTS_DIR_CONF,
-        _artifact_key,
         _span_windows_plan,
         dedup_repeated_spans,
     )
@@ -956,7 +954,7 @@ def test_local_checkpoint_degrades_without_storagelevel_param(spark):
     back to the bare eager call instead of raising TypeError on 3.5
     (code-review r11 finding). Simulated by shadowing the method with a
     3.5-signature callable."""
-    from polarify_spark.operators import dedup
+    from polarify_spark.operators import _memo
 
     df = spark.range(10)
     calls = {}
@@ -967,7 +965,7 @@ def test_local_checkpoint_degrades_without_storagelevel_param(spark):
 
     df.localCheckpoint = legacy_local_checkpoint
     try:
-        out = dedup._local_checkpoint(df)
+        out = _memo.local_checkpoint(df)
     finally:
         del df.localCheckpoint
     assert out is df
@@ -981,10 +979,9 @@ def test_local_checkpoint_degrades_without_storagelevel_param(spark):
 
     df.localCheckpoint = modern_local_checkpoint
     try:
-        assert dedup._local_checkpoint(df) is df
+        assert _memo.local_checkpoint(df) is df
     finally:
         del df.localCheckpoint
-    from polarify_spark.operators import _memo
 
     assert calls["level"] == _memo._CHECKPOINT_STORAGE
 
@@ -993,7 +990,7 @@ def test_local_checkpoint_degrades_without_storagelevel_param(spark):
 
     real = spark.range(10)
     assert "storageLevel" in inspect.signature(real.localCheckpoint).parameters
-    assert dedup._local_checkpoint(real).count() == 10
+    assert _memo.local_checkpoint(real).count() == 10
 
 
 def test_durable_artifact_marker_gating_and_tmp_reap(spark, tmp_path):
@@ -1007,10 +1004,9 @@ def test_durable_artifact_marker_gating_and_tmp_reap(spark, tmp_path):
         the next successful publish.
     """
     from polarify_spark.operators import release_shared_caches
-    from polarify_spark.operators._memo import COMMIT_MARKER
+    from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF, COMMIT_MARKER
+    from polarify_spark.operators._memo import artifact_key as _artifact_key
     from polarify_spark.operators.dedup import (
-        ARTIFACTS_DIR_CONF,
-        _artifact_key,
         _span_windows_plan,
         dedup_repeated_spans,
     )
@@ -1130,8 +1126,8 @@ def test_dedup_fills_build_over_materialized_gram_artifact(spark):
     the pairwise kernel must no longer hold its corpus-scale ``cache()``
     (redundant storage over the checkpointed table, and its CacheManager
     plan-matching polluted unrelated queries' plans)."""
+    from polarify_spark.operators._memo import DEDUP
     from polarify_spark.operators.dedup import (
-        _dedup_stage_memo,
         _grams_df,
         _materialized_grams,
         _pairwise_jaccard,
@@ -1149,7 +1145,7 @@ def test_dedup_fills_build_over_materialized_gram_artifact(spark):
     # the verified-pairs fill registers the shared artifact in the memo:
     # later fills (anchored, pairwise) reuse the one materialized table
     _verified_pairs(grams)
-    memo = _dedup_stage_memo(grams)
+    memo = DEDUP.corpus(grams)
     assert "materialized" in memo and "verified" in memo, sorted(
         k for k in memo if isinstance(k, str)
     )

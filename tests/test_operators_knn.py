@@ -222,8 +222,9 @@ def test_served_index_builds_once_and_survives_cache_release(spark):
     from unittest.mock import patch
 
     from polarify_spark.operators import knn, release_shared_caches
+    from polarify_spark.operators._memo import KNN_INDEX
 
-    knn._INDEX_MEMO.clear()
+    KNN_INDEX.clear()
     builds = 0
     orig = knn.save_ivf_index
 
@@ -253,7 +254,7 @@ def test_served_index_builds_once_and_survives_cache_release(spark):
         # entries even after the path was dropped, and a bare count()
         # passes through a silent rebuild.
         assert (
-            knn._INDEX_MEMO.get(("ivf_index", SF_DIR)) == paths[0]
+            KNN_INDEX.memo.get(("ivf_index", SF_DIR)) == (None, paths[0])
         ), "index-path memo must survive release with the same path"
         assert knn.similarity_knn_index_serve(spark, SF_DIR).count() == n1
     assert builds == 1, "release must not trigger an index rebuild"
@@ -266,13 +267,14 @@ def test_index_dir_cleanup_removes_dirs_and_memo(spark):
     import os
 
     from polarify_spark.operators import knn
+    from polarify_spark.operators._memo import KNN_INDEX
 
     n = knn.similarity_knn_index_serve(spark, SF_DIR).count()
     assert knn._INDEX_DIRS, "serve must register its dir for cleanup"
     dirs = list(knn._INDEX_DIRS)
 
     knn._cleanup_index_dirs()
-    assert not knn._INDEX_DIRS and not knn._INDEX_MEMO
+    assert not knn._INDEX_DIRS and not KNN_INDEX.memo
     assert not any(os.path.isdir(p) for p in dirs), dirs
 
     # next call rebuilds from scratch and serves the same result
@@ -289,10 +291,11 @@ def test_index_cleanup_timeout_leaves_dirs_for_os_reaping(tmp_path, monkeypatch)
     cleanup. A completed build's dir (its lock acquirable) is still
     deleted — one wedged lock no longer aborts the whole cleanup. No
     Spark needed: pure module-state test. Lock and memo share the key,
-    as ``_memo.memo_build(..., locks=_INDEX_BUILD_LOCKS)`` guarantees."""
+    as ``KNN_INDEX.get`` guarantees."""
     import threading
 
     from polarify_spark.operators import knn
+    from polarify_spark.operators._memo import KNN_INDEX
 
     wedged_dir = tmp_path / "wedged_index"
     done_dir = tmp_path / "done_index"
@@ -302,16 +305,17 @@ def test_index_cleanup_timeout_leaves_dirs_for_os_reaping(tmp_path, monkeypatch)
     wedged_lock = threading.Lock()
     wedged_lock.acquire()  # a permanently-held build lock = the wedged build
     monkeypatch.setattr(knn, "_CLEANUP_LOCK_TIMEOUT_S", 0.05)
-    monkeypatch.setitem(knn._INDEX_BUILD_LOCKS, ("probe", "wedged"), wedged_lock)
-    monkeypatch.setitem(knn._INDEX_BUILD_LOCKS, ("probe", "done"), threading.Lock())
+    monkeypatch.setitem(KNN_INDEX.locks, ("probe", "wedged"), wedged_lock)
+    monkeypatch.setitem(KNN_INDEX.locks, ("probe", "done"), threading.Lock())
     knn._INDEX_DIRS.extend([str(wedged_dir), str(done_dir), str(unmapped_dir)])
-    knn._INDEX_MEMO[("probe", "wedged")] = str(wedged_dir)
-    knn._INDEX_MEMO[("probe", "done")] = str(done_dir)
+    KNN_INDEX.memo[("probe", "wedged")] = (None, str(wedged_dir))
+    KNN_INDEX.memo[("probe", "done")] = (None, str(done_dir))
     try:
         knn._cleanup_index_dirs()
         assert wedged_dir.is_dir(), "wedged key's dir must not be deleted"
         assert str(wedged_dir) in knn._INDEX_DIRS, "dir must stay tracked"
-        assert knn._INDEX_MEMO.get(("probe", "wedged")) == str(wedged_dir)
+        wedged_entry = (None, str(wedged_dir))
+        assert KNN_INDEX.memo.get(("probe", "wedged")) == wedged_entry
         assert unmapped_dir.is_dir(), (
             "a dir with no memo entry may be the wedged build's live "
             "write target — must survive"
@@ -320,14 +324,14 @@ def test_index_cleanup_timeout_leaves_dirs_for_os_reaping(tmp_path, monkeypatch)
         assert not done_dir.is_dir(), (
             "completed build's dir must be deleted despite the wedged lock"
         )
-        assert ("probe", "done") not in knn._INDEX_MEMO
+        assert ("probe", "done") not in KNN_INDEX.memo
         assert str(done_dir) not in knn._INDEX_DIRS
     finally:
         wedged_lock.release()
         gone = {str(wedged_dir), str(done_dir), str(unmapped_dir)}
         knn._INDEX_DIRS[:] = [p for p in knn._INDEX_DIRS if p not in gone]
-        knn._INDEX_MEMO.pop(("probe", "wedged"), None)
-        knn._INDEX_MEMO.pop(("probe", "done"), None)
+        KNN_INDEX.memo.pop(("probe", "wedged"), None)
+        KNN_INDEX.memo.pop(("probe", "done"), None)
 
 
 def test_index_cleanup_deletes_dir_of_build_completed_during_wait(tmp_path):
@@ -344,6 +348,7 @@ def test_index_cleanup_deletes_dir_of_build_completed_during_wait(tmp_path):
     import time
 
     from polarify_spark.operators import knn
+    from polarify_spark.operators._memo import KNN_INDEX
 
     wedged_dir = tmp_path / "wedged_index"
     finished_dir = tmp_path / "finished_during_wait"
@@ -351,9 +356,9 @@ def test_index_cleanup_deletes_dir_of_build_completed_during_wait(tmp_path):
     finished_dir.mkdir()
     wedged_lock = threading.Lock()
     wedged_lock.acquire()
-    knn._INDEX_BUILD_LOCKS[("probe", "wedged2")] = wedged_lock
+    KNN_INDEX.locks[("probe", "wedged2")] = wedged_lock
     knn._INDEX_DIRS.extend([str(wedged_dir), str(finished_dir)])
-    knn._INDEX_MEMO[("probe", "wedged2")] = str(wedged_dir)
+    KNN_INDEX.memo[("probe", "wedged2")] = (None, str(wedged_dir))
     orig_timeout = knn._CLEANUP_LOCK_TIMEOUT_S
     knn._CLEANUP_LOCK_TIMEOUT_S = 1.5
 
@@ -364,8 +369,8 @@ def test_index_cleanup_deletes_dir_of_build_completed_during_wait(tmp_path):
         # inserts its memo entry now — after the snapshot, before the
         # blocked-branch filter
         time.sleep(0.2)
-        with knn._INDEX_MEMO_LOCK:
-            knn._INDEX_MEMO[("k", "finished")] = str(finished_dir)
+        with KNN_INDEX.lock:
+            KNN_INDEX.memo[("k", "finished")] = (None, str(finished_dir))
         t.join(timeout=30)
         assert not t.is_alive()
 
@@ -374,16 +379,16 @@ def test_index_cleanup_deletes_dir_of_build_completed_during_wait(tmp_path):
             "dir of the build that completed during the wait must be "
             "deleted (its key was never blocked)"
         )
-        assert ("k", "finished") not in knn._INDEX_MEMO
+        assert ("k", "finished") not in KNN_INDEX.memo
         assert str(finished_dir) not in knn._INDEX_DIRS
     finally:
         knn._CLEANUP_LOCK_TIMEOUT_S = orig_timeout
         wedged_lock.release()
         gone = {str(wedged_dir), str(finished_dir)}
         knn._INDEX_DIRS[:] = [p for p in knn._INDEX_DIRS if p not in gone]
-        knn._INDEX_MEMO.pop(("probe", "wedged2"), None)
-        knn._INDEX_MEMO.pop(("k", "finished"), None)
-        knn._INDEX_BUILD_LOCKS.pop(("probe", "wedged2"), None)
+        KNN_INDEX.memo.pop(("probe", "wedged2"), None)
+        KNN_INDEX.memo.pop(("k", "finished"), None)
+        KNN_INDEX.locks.pop(("probe", "wedged2"), None)
 
 
 def test_index_cleanup_spares_dirs_added_after_snapshot(tmp_path):
@@ -397,6 +402,7 @@ def test_index_cleanup_spares_dirs_added_after_snapshot(tmp_path):
     import threading
 
     from polarify_spark.operators import knn
+    from polarify_spark.operators._memo import KNN_INDEX
 
     early = tmp_path / "early_index"
     late = tmp_path / "late_index"
@@ -404,9 +410,9 @@ def test_index_cleanup_spares_dirs_added_after_snapshot(tmp_path):
     late.mkdir()
     gate = threading.Lock()
     gate.acquire()  # parks the cleanup thread post-snapshot
-    knn._INDEX_BUILD_LOCKS[("probe", "gate")] = gate
+    KNN_INDEX.locks[("probe", "gate")] = gate
     knn._INDEX_DIRS.append(str(early))
-    knn._INDEX_MEMO[("k", "early")] = str(early)
+    KNN_INDEX.memo[("k", "early")] = (None, str(early))
 
     t = threading.Thread(target=knn._cleanup_index_dirs)
     t.start()
@@ -416,9 +422,9 @@ def test_index_cleanup_spares_dirs_added_after_snapshot(tmp_path):
         import time
 
         time.sleep(0.1)
-        with knn._INDEX_MEMO_LOCK:
+        with KNN_INDEX.lock:
             knn._INDEX_DIRS.append(str(late))
-            knn._INDEX_MEMO[("k", "late")] = str(late)
+            KNN_INDEX.memo[("k", "late")] = (None, str(late))
     finally:
         gate.release()
     t.join(timeout=15)
@@ -426,14 +432,14 @@ def test_index_cleanup_spares_dirs_added_after_snapshot(tmp_path):
 
     try:
         assert not early.is_dir()
-        assert ("k", "early") not in knn._INDEX_MEMO
+        assert ("k", "early") not in KNN_INDEX.memo
         assert late.is_dir(), "post-snapshot dir must survive"
         assert str(late) in knn._INDEX_DIRS, "post-snapshot dir stays tracked"
-        assert knn._INDEX_MEMO.get(("k", "late")) == str(late)
+        assert KNN_INDEX.memo.get(("k", "late")) == (None, str(late))
     finally:
         knn._INDEX_DIRS[:] = [p for p in knn._INDEX_DIRS if p != str(late)]
-        knn._INDEX_MEMO.pop(("k", "late"), None)
-        knn._INDEX_BUILD_LOCKS.pop(("probe", "gate"), None)
+        KNN_INDEX.memo.pop(("k", "late"), None)
+        KNN_INDEX.locks.pop(("probe", "gate"), None)
 
 
 def test_index_store_commit_marker_protocol(spark, tmp_path):

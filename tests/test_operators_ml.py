@@ -37,20 +37,21 @@ def test_logreg_trains_once_per_corpus_and_releases(spark):
     """The trained model is a per-corpus memo artifact (the BPE/k-means
     policy): repeat scoring calls reuse one training run; a released memo
     retrains cleanly to identical results."""
-    from polarify_spark.operators import ml, release_shared_caches
+    from polarify_spark.operators import release_shared_caches
+    from polarify_spark.operators._memo import ML
 
     release_shared_caches(spark, scope="all")
     first = {tuple(r) for r in logreg_quality(spark, SF_DIR).collect()}
-    with ml._ML_MEMO_LOCK:
-        sess1, (feats1, w1) = ml._ML_MEMO[SF_DIR]
+    with ML.lock:
+        sess1, (feats1, w1) = ML.memo[SF_DIR]
     assert sess1 is spark
     logreg_quality(spark, SF_DIR).collect()
-    with ml._ML_MEMO_LOCK:
-        _, (feats2, w2) = ml._ML_MEMO[SF_DIR]
+    with ML.lock:
+        _, (feats2, w2) = ML.memo[SF_DIR]
     assert feats1 is feats2 and w1 is w2  # no retrain on repeat calls
     release_shared_caches(spark, scope="all")
-    with ml._ML_MEMO_LOCK:
-        assert SF_DIR not in ml._ML_MEMO
+    with ML.lock:
+        assert SF_DIR not in ML.memo
     assert {tuple(r) for r in logreg_quality(spark, SF_DIR).collect()} == first
 
 
@@ -58,19 +59,20 @@ def test_logreg_memo_evicts_entries_from_a_replaced_session(spark):
     """A memo hit bound to a DIFFERENT SparkSession must be evicted and
     rebuilt, not served: memo values hold checkpoint-RDD-backed frames,
     and serving them across sessions raises on any action once the
-    original session is stopped (the corpus_memo_build session guard)."""
-    from polarify_spark.operators import ml, release_shared_caches
+    original session is stopped (the MemoFamily.get session guard)."""
+    from polarify_spark.operators import release_shared_caches
+    from polarify_spark.operators._memo import ML
 
     release_shared_caches(spark, scope="all")
     baseline = {tuple(r) for r in logreg_quality(spark, SF_DIR).collect()}
-    with ml._ML_MEMO_LOCK:
-        old_entry = ml._ML_MEMO[SF_DIR]
+    with ML.lock:
+        old_entry = ML.memo[SF_DIR]
     other = spark.newSession()  # same context, DIFFERENT session object
     assert {
         tuple(r) for r in logreg_quality(other, SF_DIR).collect()
     } == baseline
-    with ml._ML_MEMO_LOCK:
-        new_entry = ml._ML_MEMO[SF_DIR]
+    with ML.lock:
+        new_entry = ML.memo[SF_DIR]
     assert new_entry[0] is other and new_entry is not old_entry
     release_shared_caches(spark, scope="all")
 

@@ -109,28 +109,29 @@ def test_charlm_covers_corpus_and_scores_are_sane(spark):
 
 def test_search_memo_shares_one_index_build_across_queries(spark):
     """bm25 and hybrid-RRF must share ONE inverted-index build per corpus
-    (the _SEARCH_MEMO contract), and a released memo rebuilds cleanly."""
+    (the ``_memo.SEARCH`` contract), and a released memo rebuilds cleanly."""
     from polarify_spark.operators import release_shared_caches, search
+    from polarify_spark.operators._memo import SEARCH
 
     release_shared_caches(spark, scope="all")
     tf1 = search._tf_table(spark, SF_DIR)
     tf2 = search._tf_table(spark, SF_DIR)
     assert tf1 is tf2  # same checkpointed frame, not a re-build
-    with search._SEARCH_MEMO_LOCK:
-        corpora = len(search._SEARCH_MEMO)
+    with SEARCH.lock:
+        corpora = len(SEARCH.memo)
     assert corpora == 1
     # the charlm bigram table registers under the same corpus entry
     charlm_quality(spark, SF_DIR).collect()
-    with search._SEARCH_MEMO_LOCK:
-        assert len(search._SEARCH_MEMO) == 1
-        memo = search._SEARCH_MEMO[0][1]
+    with SEARCH.lock:
+        assert len(SEARCH.memo) == 1
+        memo = SEARCH.memo[0][1]
     assert {k for k in memo if not isinstance(k, tuple)} == {
         "tf",
         "charlm_per_doc",
     }
     release_shared_caches(spark, scope="all")
-    with search._SEARCH_MEMO_LOCK:
-        assert not search._SEARCH_MEMO
+    with SEARCH.lock:
+        assert not SEARCH.memo
     assert search._tf_table(spark, SF_DIR) is not tf1
 
 

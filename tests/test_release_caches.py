@@ -5,38 +5,40 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_release_shared_caches_empties_memos_and_catalog(spark):
-    from polarify_spark.operators import dedup, release_shared_caches, similarity
+    from polarify_spark.operators import release_shared_caches, similarity
+    from polarify_spark.operators._memo import ANN, DEDUP
 
     # populate the ANN memo and the catalog cache through a real query
     similarity.QUERIES["similarity_topk_ivf"][0](spark, SF_DIR).count()
-    assert similarity._ANN_MEMO, "expected the IVF build to memoize its index"
+    assert ANN.memo, "expected the IVF build to memoize its index"
 
     release_shared_caches(spark)
 
-    assert similarity._ANN_MEMO == []
-    assert dedup._DEDUP_MEMO == []
+    assert ANN.memo == []
+    assert DEDUP.memo == []
     jcatalog = spark._jsparkSession.sharedState().cacheManager()
     assert jcatalog.isEmpty(), "catalog cache should be empty after release"
 
     # operators rebuild transparently after a release
     out = similarity.QUERIES["similarity_topk_ivf"][0](spark, SF_DIR)
     assert out.count() > 0
-    assert similarity._ANN_MEMO, "rebuild should re-memoize"
+    assert ANN.memo, "rebuild should re-memoize"
 
 
 def test_release_scope_dedup_keeps_ann_memo(spark):
     from polarify_spark.operators import dedup, release_shared_caches, similarity
+    from polarify_spark.operators._memo import ANN, DEDUP
 
     similarity.QUERIES["similarity_topk_ivf"][0](spark, SF_DIR).count()
     dedup.QUERIES["dedup_minhash_lsh"][0](spark, SF_DIR).count()
-    assert similarity._ANN_MEMO and dedup._DEDUP_MEMO
+    assert ANN.memo and DEDUP.memo
 
     release_shared_caches(spark, scope="dedup")
-    assert dedup._DEDUP_MEMO == []
-    assert similarity._ANN_MEMO, "ANN memo must survive a dedup-scoped release"
+    assert DEDUP.memo == []
+    assert ANN.memo, "ANN memo must survive a dedup-scoped release"
 
     release_shared_caches(spark, scope="all")
-    assert similarity._ANN_MEMO == []
+    assert ANN.memo == []
 
 
 def test_release_rejects_unknown_scope(spark):
@@ -55,10 +57,9 @@ def test_memo_build_helpers_share_one_build_across_threads():
     import threading
     import time
 
-    from polarify_spark.operators.dedup import _dedup_memo_build
-    from polarify_spark.operators.similarity import _memo_build
+    from polarify_spark.operators._memo import ANN, DEDUP
 
-    for helper in (_memo_build, _dedup_memo_build):
+    for helper in (ANN.build, DEDUP.build):
         memo: dict = {}
         calls = []
 
@@ -112,10 +113,10 @@ def test_bpe_release_preserves_build_locks():
     thread a fresh lock mid-build, reviving the duplicate-train race."""
     import threading
 
-    from polarify_spark.operators import bpe
+    from polarify_spark.operators._memo import BPE
 
-    with bpe._BPE_MEMO_LOCK:
-        bpe._BPE_BUILD_LOCKS.setdefault("corpus-x", threading.Lock())
+    with BPE.lock:
+        BPE.locks.setdefault("corpus-x", threading.Lock())
 
     import polarify_spark.operators as ops
 
@@ -129,12 +130,12 @@ def test_bpe_release_preserves_build_locks():
             _jvm = None
 
     ops.release_shared_caches(_NoopSpark(), scope="all")
-    assert "corpus-x" in bpe._BPE_BUILD_LOCKS
-    assert bpe._BPE_MEMO == {}
+    assert "corpus-x" in BPE.locks
+    assert BPE.memo == {}
 
 
 def test_corpus_memo_build_session_guard_and_sharing():
-    """corpus_memo_build (the bpe/ml trained-artifact shape): same-session
+    """MemoFamily.get (the bpe/ml trained-artifact shape): same-session
     racers share ONE build; a hit bound to a DIFFERENT session object is
     evicted and rebuilt (never served — its frames die with the old
     context); the LRU cap trims oldest corpora; and a racer that finds a
@@ -144,11 +145,10 @@ def test_corpus_memo_build_session_guard_and_sharing():
     import threading
     import time
 
-    from polarify_spark.operators._memo import corpus_memo_build
+    from polarify_spark.operators._memo import MemoFamily
 
-    lock = threading.Lock()
-    memo: dict = {}
-    locks: dict = {}
+    fam = MemoFamily("test", 4, "key")
+    memo = fam.memo
     sess_a, sess_b = object(), object()
     calls: list = []
 
@@ -163,9 +163,7 @@ def test_corpus_memo_build_session_guard_and_sharing():
     # same session, same key, racing threads -> one build
     threads = [
         threading.Thread(
-            target=lambda: corpus_memo_build(
-                lock, memo, locks, sess_a, "sf1", build("a")
-            )
+            target=lambda: fam.get(sess_a, "sf1", build("a"))
         )
         for _ in range(4)
     ]
@@ -177,12 +175,12 @@ def test_corpus_memo_build_session_guard_and_sharing():
     assert memo["sf1"] == (sess_a, "a")
 
     # a different session must evict and rebuild, not serve sess_a's value
-    out = corpus_memo_build(lock, memo, locks, sess_b, "sf1", build("b"))
+    out = fam.get(sess_b, "sf1", build("b"))
     assert out == "b" and memo["sf1"] == (sess_b, "b")
 
     # cap: oldest corpora trimmed
     for i in range(6):
-        corpus_memo_build(lock, memo, locks, sess_b, f"c{i}", build(f"v{i}"))
+        fam.get(sess_b, f"c{i}", build(f"v{i}"))
     assert len(memo) <= 4
 
     # race shape: an entry for ANOTHER session inserted between our
@@ -213,10 +211,8 @@ def test_corpus_memo_build_session_guard_and_sharing():
         def __exit__(self, *exc):
             self.inner.release()
 
-    race_lock = _InsertingLock(threading.Lock())
-    out = corpus_memo_build(
-        race_lock, memo, locks, sess_b, "sfX", build("mine")
-    )
+    fam.lock = _InsertingLock(threading.Lock())
+    out = fam.get(sess_b, "sfX", build("mine"))
     assert out == "mine"
     assert calls.count("mine") == 1  # built exactly once, on the retry
     assert memo["sfX"] == (sess_b, "mine")  # ...and MEMOIZED, not private
@@ -229,10 +225,10 @@ def test_corpus_memo_build_persistent_foreign_racer_bounded_fallback():
     an unbounded evict/rebuild ping-pong."""
     import threading
 
-    from polarify_spark.operators._memo import corpus_memo_build
+    from polarify_spark.operators._memo import MemoFamily
 
-    memo: dict = {}
-    locks: dict = {}
+    fam = MemoFamily("test", 4, "key")
+    memo = fam.memo
     sess_a, sess_b = object(), object()
     calls: list = []
     memo["sfX"] = (sess_a, "theirs")
@@ -254,14 +250,8 @@ def test_corpus_memo_build_persistent_foreign_racer_bounded_fallback():
         calls.append("mine")
         return "mine"
 
-    out = corpus_memo_build(
-        _AlwaysInsertingLock(threading.Lock()),
-        memo,
-        locks,
-        sess_b,
-        "sfX",
-        build,
-    )
+    fam.lock = _AlwaysInsertingLock(threading.Lock())
+    out = fam.get(sess_b, "sfX", build)
     assert out == "mine"
     assert calls == ["mine"]  # exactly one fallback build
     assert memo["sfX"] == (sess_a, "theirs")  # adversary's entry stands
@@ -275,10 +265,10 @@ def test_corpus_memo_build_new_session_threads_share_one_build():
     import threading
     import time
 
-    from polarify_spark.operators._memo import corpus_memo_build
+    from polarify_spark.operators._memo import MemoFamily
 
-    memo: dict = {}
-    locks: dict = {}
+    fam = MemoFamily("test", 4, "key")
+    memo = fam.memo
     sess_a, sess_b = object(), object()
     calls: list = []
     calls_lock = threading.Lock()
@@ -308,15 +298,13 @@ def test_corpus_memo_build_new_session_threads_share_one_build():
         time.sleep(0.02)  # widen the window so racers pile on the lock
         return "mine"
 
-    race_lock = _FireOnceLock(threading.Lock())
+    fam.lock = _FireOnceLock(threading.Lock())
     barrier = threading.Barrier(2)
     results: list = []
 
     def run():
         barrier.wait()
-        results.append(
-            corpus_memo_build(race_lock, memo, locks, sess_b, "sfX", build)
-        )
+        results.append(fam.get(sess_b, "sfX", build))
 
     threads = [threading.Thread(target=run) for _ in range(2)]
     for t in threads:
@@ -331,7 +319,7 @@ def test_corpus_memo_build_new_session_threads_share_one_build():
 def test_release_quiesces_inflight_handle_build(spark):
     """A release racing a mid-flight simhash handle build must not leave a
     handle whose memo dict is detached from the registry (ADVICE r12 —
-    ``_memo_src`` returning None would key later durable artifacts off
+    ``DEDUP.src`` returning None would key later durable artifacts off
     session-specific checkpoint plans). The fix: ``release_shared_caches``
     acquires every per-key handle lock before the paired clears, so it
     BLOCKS behind the builder and the clears always run after the racing
@@ -339,8 +327,8 @@ def test_release_quiesces_inflight_handle_build(spark):
     re-registers an ATTACHED memo."""
     import threading
 
-    from polarify_spark.operators import dedup, release_shared_caches
-    from polarify_spark.operators._memo import corpus_memo_build
+    from polarify_spark.operators import release_shared_caches
+    from polarify_spark.operators._memo import DEDUP, SIMHASH_HANDLE
 
     key = "race-inflight-handle"
     grams = spark.range(4).selectExpr(
@@ -351,20 +339,13 @@ def test_release_quiesces_inflight_handle_build(spark):
     result = {}
 
     def build():
-        memo = dedup._dedup_stage_memo(grams)  # reads the PRE-clear registry
+        memo = DEDUP.corpus(grams)  # reads the PRE-clear registry
         mid_build.set()
         assert finish.wait(timeout=30)
         return memo, grams
 
     def builder():
-        result["entry"] = corpus_memo_build(
-            dedup._SIMHASH_HANDLE_LOCK,
-            dedup._SIMHASH_HANDLE_MEMO,
-            dedup._SIMHASH_HANDLE_LOCKS,
-            spark,
-            key,
-            build,
-        )
+        result["entry"] = SIMHASH_HANDLE.get(spark, key, build)
 
     b = threading.Thread(target=builder)
     b.start()
@@ -384,21 +365,16 @@ def test_release_quiesces_inflight_handle_build(spark):
 
     # the clears ran AFTER the insert: no handle survives the release, so
     # the detached memo the builder produced is unreachable
-    with dedup._SIMHASH_HANDLE_LOCK:
-        assert dedup._SIMHASH_HANDLE_MEMO == {}
+    with SIMHASH_HANDLE.lock:
+        assert SIMHASH_HANDLE.memo == {}
     memo, _ = result["entry"]
-    assert dedup._memo_src(memo) is None, "builder's memo is detached"
+    assert DEDUP.src(memo) is None, "builder's memo is detached"
 
     # a fresh consumer rebuilds an ATTACHED handle transparently
-    fresh_memo, _ = corpus_memo_build(
-        dedup._SIMHASH_HANDLE_LOCK,
-        dedup._SIMHASH_HANDLE_MEMO,
-        dedup._SIMHASH_HANDLE_LOCKS,
-        spark,
-        key,
-        lambda: (dedup._dedup_stage_memo(grams), grams),
+    fresh_memo, _ = SIMHASH_HANDLE.get(
+        spark, key, lambda: (DEDUP.corpus(grams), grams)
     )
-    assert dedup._memo_src(fresh_memo) is not None
+    assert DEDUP.src(fresh_memo) is not None
 
     # drop the synthetic key so later tests see pristine registries
     release_shared_caches(spark, scope="dedup")
@@ -415,8 +391,8 @@ def test_release_stress_never_leaves_detached_handles(spark):
     import threading
     import time
 
-    from polarify_spark.operators import dedup, release_shared_caches
-    from polarify_spark.operators._memo import corpus_memo_build
+    from polarify_spark.operators import release_shared_caches
+    from polarify_spark.operators._memo import DEDUP, SIMHASH_HANDLE
 
     keys = [f"stress-{i}" for i in range(4)]
     frames = {
@@ -428,21 +404,14 @@ def test_release_stress_never_leaves_detached_handles(spark):
 
     def build_for(key):
         def build():
-            memo = dedup._dedup_stage_memo(frames[key])
+            memo = DEDUP.corpus(frames[key])
             time.sleep(random.uniform(0, 0.01))  # widen the race window
             return memo, frames[key]
 
         return build
 
     def touch(key):
-        return corpus_memo_build(
-            dedup._SIMHASH_HANDLE_LOCK,
-            dedup._SIMHASH_HANDLE_MEMO,
-            dedup._SIMHASH_HANDLE_LOCKS,
-            spark,
-            key,
-            build_for(key),
-        )
+        return SIMHASH_HANDLE.get(spark, key, build_for(key))
 
     for k in keys:  # pre-seed the per-key locks
         touch(k)
@@ -477,10 +446,10 @@ def test_release_stress_never_leaves_detached_handles(spark):
     assert not errors, errors
     assert all(not t.is_alive() for t in builders + releasers)
 
-    with dedup._SIMHASH_HANDLE_LOCK:
-        leftovers = list(dedup._SIMHASH_HANDLE_MEMO.values())
+    with SIMHASH_HANDLE.lock:
+        leftovers = list(SIMHASH_HANDLE.memo.values())
     for _session, (memo, _frame) in leftovers:
-        assert dedup._memo_src(memo) is not None, (
+        assert DEDUP.src(memo) is not None, (
             "detached handle survived a release"
         )
 

@@ -63,7 +63,7 @@ spark = (SparkSession.builder.master("local[16]")
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 if DURABLE:
-    from polarify_spark.operators.dedup import ARTIFACTS_DIR_CONF
+    from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF
     spark.conf.set(ARTIFACTS_DIR_CONF, DURABLE)
     print(f"durable arm: {ARTIFACTS_DIR_CONF}={DURABLE}", flush=True)
 import duckdb, numpy as np, pandas as pd

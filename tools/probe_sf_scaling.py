@@ -62,7 +62,7 @@ def run_child(cpus: str, sf_dir: str) -> None:
 
     import __spark_entry__ as entry_mod
     from polarify_spark.operators import dedup
-    from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF
+    from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF, DEDUP
 
     spark = _session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -93,7 +93,7 @@ def run_child(cpus: str, sf_dir: str) -> None:
         # gram artifact: this arm pays materialized + anchored, exactly
         # the corpus-proportional ground-truth path)
         sampled = dedup._recall_sample_grams(spark, sf_dir)
-        memo = dedup._dedup_stage_memo(sampled)
+        memo = DEDUP.corpus(sampled)
 
         def build_anchored():
             mat = dedup._materialized_grams(dedup._grams_df(spark, sf_dir))
@@ -111,9 +111,7 @@ def run_child(cpus: str, sf_dir: str) -> None:
 
         stage(
             "anchored",
-            lambda: dedup._dedup_memo_artifact(
-                memo, "anchored", build_anchored
-            ).count(),
+            lambda: DEDUP.artifact(memo, "anchored", build_anchored).count(),
         )
         stage("ngram", lambda: noop(registry["dedup_ngram_jaccard"](spark, sf_dir)))
         stage("lsh", lambda: noop(registry["dedup_lsh_jaccard"](spark, sf_dir)))

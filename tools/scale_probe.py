@@ -177,13 +177,10 @@ def main() -> None:
         # each timed factor builds its pipeline/index artifacts from
         # scratch: the module memos would otherwise hand the warmup's
         # materializations back to the measured run
-        from polarify_spark.operators.bpe import _BPE_MEMO
-        from polarify_spark.operators.dedup import _DEDUP_MEMO
-        from polarify_spark.operators.similarity import _ANN_MEMO
+        from polarify_spark.operators._memo import FAMILIES
 
-        del _DEDUP_MEMO[:]
-        del _ANN_MEMO[:]
-        _BPE_MEMO.clear()
+        for family in ("dedup", "ann", "bpe"):
+            FAMILIES[family].clear()
         spark.catalog.clearCache()
 
     # untimed warmup at the base factor: JVM JIT, codegen, Arrow workers,
