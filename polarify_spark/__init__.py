@@ -42,6 +42,8 @@ from typing import Any, Callable
 
 from .transpiler import (
     TranspileError,
+    _hoist_shared,
+    _parameters,
     allow_boolops as _allow_boolops,
     allow_chained_comparisons as _allow_chained,
     branch_tree_to_expr,
@@ -77,21 +79,33 @@ def _compiled_function_def(
     if not isinstance(func_def, (ast.FunctionDef, ast.AsyncFunctionDef)):
         raise TranspileError(f"expected a function definition, got {type(func_def)}")
 
+    args = func_def.args
+    params = frozenset(
+        a.arg
+        for a in (*args.posonlyargs, *args.args, *args.kwonlyargs, args.vararg, args.kwarg)
+        if a is not None
+    )
+    taken = params | {n.id for n in ast.walk(func_def) if isinstance(n, ast.Name)}
     token = _allow_boolops.set(rewrite_boolops)
     token_chained = _allow_chained.set(rewrite_chained)
+    token_params = _parameters.set(params)
     try:
         expr = branch_tree_to_expr(compile_block(func_def.body))
     finally:
+        _parameters.reset(token_params)
         _allow_chained.reset(token_chained)
         _allow_boolops.reset(token)
 
     # The generated body imports pyspark.sql.functions as F itself, so the
     # caller's module doesn't need any particular import convention
-    # (reference rationale, __init__.py:26-31).
+    # (reference rationale, __init__.py:26-31). A value merged from a
+    # return-free conditional is shared by later statements: it is bound
+    # once to a local temporary instead of printed at every use.
     func_def.body = [
         ast.ImportFrom(
             module="pyspark.sql", names=[ast.alias(name="functions", asname="F")], level=0
         ),
+        *_hoist_shared(expr, taken),
         ast.Return(value=expr),
     ]
     func_def.decorator_list = []
@@ -130,7 +144,13 @@ def sparkify(
 
     Call the decorated function with ``Column`` arguments (e.g.
     ``F.col("x")``) inside ``df.select`` / ``withColumn``; it returns one
-    ``Column`` encoding all branches as a Catalyst ``CaseWhen``.
+    ``Column`` encoding all branches as a Catalyst ``CaseWhen``. An
+    ``if``/``match`` in which no branch returns becomes one ``F.when`` per
+    variable it rebinds, bound once to a local ``_sparkify_t<k>`` when later
+    statements read it more than once, wherever the transpiler's exactness
+    guard proves that equal to the reference's path split (see
+    ``polarify_spark.transpiler``); elsewhere the branches split the rest of
+    the function as in the reference.
 
     The generated function is exec'd in ``func.__globals__`` so that calls to
     sibling module-level helpers still resolve (reference behavior,

@@ -76,7 +76,8 @@ def release_shared_caches(spark, scope: str = "all") -> None:
     ``_memo.MemoFamily`` lists its scopes): ``"dedup"`` drops the dedup
     stage memo, the span-plan cache and the simhash handles; ``"ann"``
     drops the ANN index memo; ``"all"`` drops every family except the
-    on-disk knn index paths, plus every catalog-cached DataFrame.
+    on-disk knn index paths and JSONL exports, plus every catalog-cached
+    DataFrame.
 
     The memos deliberately outlive single queries (an ANN index is built
     once per corpus and served many times), but a long-running session that

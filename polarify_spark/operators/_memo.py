@@ -289,11 +289,22 @@ FAMILIES = {
         # ("ivf_index", sf_dir) -> on-disk IVF index path: holds no JVM
         # memory, so no release scope drops it
         MemoFamily("knn_index", 4, "key", ()),
+        # sf_dir -> JSONL export dir of the documents table, the file
+        # stream the streaming drains read: on disk too, so no scope
+        MemoFamily("jsonl_export", 4, "key", ()),
     )
 }
-DEDUP, SPAN_PLAN, SIMHASH_HANDLE, ANN, SEARCH, BPE, ML, KNN_INDEX = (
-    FAMILIES.values()
-)
+(
+    DEDUP,
+    SPAN_PLAN,
+    SIMHASH_HANDLE,
+    ANN,
+    SEARCH,
+    BPE,
+    ML,
+    KNN_INDEX,
+    JSONL_EXPORT,
+) = FAMILIES.values()
 
 
 def overlap_fills(*thunks):

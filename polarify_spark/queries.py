@@ -98,7 +98,8 @@ def q6_branch_assign_chains(x):
 
 @sparkify
 def q7_sequential_ifs(x):
-    # S5 distribution: sequential ifs multiply into every open leaf
+    # S5 sequential return-free ifs: each merges into one F.when over `s`
+    # (two nested CASE WHEN; the reference's path split printed three)
     s = 1
     if x > 0:
         s = 2

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import threading
 import uuid
 from contextlib import contextmanager
 from typing import TYPE_CHECKING
@@ -451,10 +450,39 @@ def run_to_parquet_sink(
     return stream_df.sparkSession.read.schema(stream_df.schema).parquet(out_dir)
 
 
-#: sf_dir -> private JSONL export dir for this process (see
-#: streaming_docs_jsonl). Guarded by _JSONL_EXPORT_LOCK.
-_JSONL_EXPORT_DIRS: dict[str, str] = {}
-_JSONL_EXPORT_LOCK = threading.Lock()
+#: (sf_dir, export dir) of every JSONL export this process made, the
+#: memo entries the ``jsonl_export`` family's cap trimmed included; the
+#: dirs are removed at interpreter exit (:func:`_reap_jsonl_exports`).
+#: Guarded by the family lock.
+_JSONL_EXPORT_DIRS: list[tuple[str, str]] = []
+
+
+def _reap_jsonl_exports() -> None:
+    """Remove the JSONL export dirs this process made and drop their memo
+    entries; registered with ``atexit`` on the first export, callable
+    directly. The dirs of a key whose export is in flight (its build lock
+    is held) stay tracked for a later call."""
+    import shutil
+
+    from ..operators._memo import JSONL_EXPORT
+
+    with JSONL_EXPORT.lock:
+        keys = {key for key, _ in _JSONL_EXPORT_DIRS}
+        locks = {k: JSONL_EXPORT.locks[k] for k in keys if k in JSONL_EXPORT.locks}
+    free = [k for k, lock in locks.items() if lock.acquire(blocking=False)]
+    try:
+        with JSONL_EXPORT.lock:
+            doomed = [(k, d) for k, d in _JSONL_EXPORT_DIRS if k in free]
+            _JSONL_EXPORT_DIRS[:] = [e for e in _JSONL_EXPORT_DIRS if e not in doomed]
+            for key, out_dir in doomed:
+                if JSONL_EXPORT.memo.get(key, (None, None))[1] == out_dir:
+                    del JSONL_EXPORT.memo[key]
+        for _, out_dir in doomed:
+            shutil.rmtree(out_dir, ignore_errors=True)
+    finally:
+        for key in free:
+            locks[key].release()
+
 
 #: files in the JSONL export and files consumed per trigger by the
 #: registered drains. 32 files with 8 per trigger keeps the FOUR real
@@ -478,13 +506,15 @@ def _docs_jsonl_stream(
 ) -> "DataFrame":
     """(doc_id, lang, text) as a rate-limited JSONL file stream: the
     documents table is exported once per process to a private JSON-lines
-    directory (mkdtemp, memoized per sf_dir; ``_JSONL_EXPORT_FILES``
-    files so the default ``maxFilesPerTrigger`` yields 4 real
+    directory (mkdtemp, memoized per sf_dir in the ``jsonl_export`` memo
+    family; ``_JSONL_EXPORT_FILES`` files so the default
+    ``maxFilesPerTrigger`` yields 4 real
     micro-batches with intra-batch parallelism — see the constants
     above), then read back with ``readStream`` under an explicit schema
     (streaming sources cannot infer)."""
     import tempfile
 
+    from ..operators._memo import JSONL_EXPORT
     from ..sources import write_jsonl
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -495,22 +525,24 @@ def _docs_jsonl_stream(
     # export. A fixed md5(sf_dir)-derived path under /tmp was both
     # squattable on multi-user hosts and a write race between concurrent
     # sessions (driver gate + bench + pytest all export the same path).
-    # locked check-then-insert (the memo_build contract every other memo
-    # in the package follows): two driver threads wanting the same
-    # corpus share ONE multi-second export instead of racing to run it
-    # twice and orphaning the loser's mkdtemp dir. The lock is held
-    # across the export — exports of different corpora serialize too,
-    # which is fine for a per-process test/bench fixture.
-    with _JSONL_EXPORT_LOCK:
-        out_dir = _JSONL_EXPORT_DIRS.get(sf_dir)
-        if out_dir is None:
-            out_dir = tempfile.mkdtemp(prefix="polarify_docs_jsonl_")
-            write_jsonl(
-                docs.repartition(_JSONL_EXPORT_FILES),
-                out_dir,
-                compression="none",
-            )
-            _JSONL_EXPORT_DIRS[sf_dir] = out_dir
+    # The memo family's per-key lock makes two driver threads wanting the
+    # same corpus share ONE multi-second export; different corpora export
+    # concurrently. Session-free: the files serve any session.
+    def build() -> str:
+        import atexit
+
+        out_dir = tempfile.mkdtemp(prefix="polarify_docs_jsonl_")
+        with JSONL_EXPORT.lock:
+            if not getattr(_reap_jsonl_exports, "_atexit_registered", False):
+                atexit.register(_reap_jsonl_exports)
+                _reap_jsonl_exports._atexit_registered = True
+            _JSONL_EXPORT_DIRS.append((sf_dir, out_dir))
+        write_jsonl(
+            docs.repartition(_JSONL_EXPORT_FILES), out_dir, compression="none"
+        )
+        return out_dir
+
+    out_dir = JSONL_EXPORT.get(None, sf_dir, build)
 
     return (
         spark.readStream.schema("doc_id long, lang string, text string")

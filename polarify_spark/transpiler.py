@@ -18,8 +18,15 @@ Semantics implemented (SURVEY.md section 2 numbering):
 * S1-S4  assignments (plain / annotated / multi-target / destructuring) with
   eager forward-substitution into an env of fully-inlined expressions
   (reference ``main.py:138-157,264-266``).
-* S5     ``if/elif/else`` -> *nested* conditional tree; sequential ``if``
-  statements distribute into every open leaf (reference ``main.py:275-289``).
+* S5     ``if/elif/else`` -> *nested* conditional tree (reference
+  ``main.py:275-289``). An ``if`` (or ``match``, S8) in which no branch
+  returns is collapsed back into straight-line code: each variable some
+  branch rebinds becomes one ``F.when`` over the branch values, so ``n``
+  sequential ``if``s emit ``n`` ``F.when`` instead of the reference's
+  ``2^n - 1``. The collapse is kept only where the exactness guard below
+  proves it equal to the reference's path split, which distributes every
+  later statement into every open leaf and stays the one fallback
+  (branches that return always take it).
 * S6/S7  early/partial ``return``; bare ``return`` rejected
   (reference ``main.py:291-299,360-361``).
 * S8     ``match`` -> *flat* multi-arm conditional (reference
@@ -31,6 +38,31 @@ Semantics implemented (SURVEY.md section 2 numbering):
   call's *function* position (``node.func``) and through attribute access, so
   ``s = x + 1; return s.abs()`` works instead of producing a ``NameError``
   (reference bug, ``main.py:104-107``).
+
+Exactness guard for the S5/S8 collapse. A merged variable moves arithmetic
+that Python folded per path into Spark, so a merge is kept only where every
+consumer of the merged value — transitively, through later assignments —
+gives the path split's result: ``+ - *`` and unary ``+ -`` over branch
+values that are all floats or double Columns (Python's ints are unbounded,
+its bools add as ints, and a Column of unknown type would be widened by the
+``CASE WHEN`` before the arithmetic instead of after it); ``& |`` over
+Columns and bools; ``~`` over Columns (``~True == -2``); a comparison whose
+branch values share one kind (doubles, ints, str or bool) that the other
+side matches; an ``F.when``/``otherwise`` argument; or the returned value.
+A branch value holding ``None`` or bytes keeps the split, as does every other
+consumer (``/ // % **``, builtins such as ``abs``, methods, ``F.*`` calls:
+``F.upper(t)`` reads a str as a column name), as does a merge that no
+returned value reads or whose branch values read a name rebound later.
+Parameters are taken for Columns and any other name the body never binds
+(a global) for a Python value of unknown type; the low-level API, which
+sees no signature, takes every such name for a parameter (``_parameters``).
+The check runs on the folded DAG; a failing statement is re-folded
+path-split (:func:`compile_block`). A merge also turns some programs that raised at
+call time into working ones: a test that the path split folded to a Python
+bool, which ``F.when`` rejects, becomes a Column. Residual: Catalyst still
+unfolds the shared subtrees into the plan, and it may fold a ``CASE WHEN``
+whose branches reduce to ``0.0`` and ``-0.0`` into one, so the sign of a
+zero can differ where the two forms fold differently.
 
 This module imports only the stdlib — never pyspark — so transpilation is
 unit-testable without a SparkSession (mirrors reference ``main.py:1-7``).
@@ -76,6 +108,14 @@ allow_chained_comparisons: contextvars.ContextVar[bool] = contextvars.ContextVar
 )
 
 
+#: the compiled function's parameter names, i.e. its Column arguments, for
+#: the exactness guard; ``None`` (the low-level API, which sees no
+#: signature) takes every name the body never binds for a parameter.
+_parameters: contextvars.ContextVar[frozenset[str] | None] = contextvars.ContextVar(
+    "polarify_spark_parameters", default=None
+)
+
+
 class TranspileError(ValueError):
     """Raised for any construct the transpiler does not support.
 
@@ -97,6 +137,11 @@ class TranspileError(ValueError):
 # recurses into every arm and the default; Leaf nodes are frozen (a returned
 # path ignores later statements — early-return semantics, reference
 # main.py:268-299); only Open nodes actually consume the statement.
+#
+# A conditional whose branches all end Open collapses back into one Open
+# (_join): each rebound variable's value becomes a when-chain carrying a
+# _Merge. Later statements share that node instead of copying it, so the
+# expressions form a DAG that grows linearly with the statements.
 # ---------------------------------------------------------------------------
 
 
@@ -119,6 +164,33 @@ class Switch:
 Node = Union[Open, Leaf, Switch]
 
 
+@dataclass
+class _Merge:
+    """What a merged variable's when-chain was built from."""
+
+    stmt: ast.stmt  # the If/Match it merges; re-folded path-split if unsound
+    values: list[ast.expr]  # the branch values: one per arm, then the default
+    names: frozenset[str]  # the names those values read
+
+
+def _merge_of(node: ast.AST) -> _Merge | None:
+    return getattr(node, "_sparkify_merge", None)
+
+
+@dataclass
+class _FoldState:
+    """One fold attempt of :func:`compile_block`."""
+
+    split: frozenset  # If/Match statements that must stay path-split
+    unsound: set  # merges found unsound while folding
+    merged: set  # statements collapsed by this attempt
+
+
+_fold_state: contextvars.ContextVar[_FoldState | None] = contextvars.ContextVar(
+    "polarify_spark_fold_state", default=None
+)
+
+
 # ---------------------------------------------------------------------------
 # Expression substitution + validation (reference InlineTransformer,
 # main.py:79-126). Whitelisting visitor: anything outside the supported
@@ -132,11 +204,24 @@ class _Substituter(ast.NodeTransformer):
     Substitution is eager and repeated (a substituted expression is itself
     re-visited), so the env always holds closed forms over the function's
     parameters and free globals. Operates on a fresh copy of the input tree so
-    stored env expressions are never aliased into the output.
+    stored env expressions are never aliased into the output — except merged
+    values (S5), which are returned as the same node so that each later use
+    shares one subtree instead of copying it.
     """
 
     def __init__(self, env: dict[str, ast.expr]):
         self._env = env
+
+    def visit(self, node: ast.AST) -> ast.AST:
+        merge = _merge_of(node)
+        if merge is None:
+            return super().visit(node)
+        # Re-visiting a copy would substitute names bound since the merge;
+        # sharing the node does not, so such a merge must stay path-split.
+        state = _fold_state.get()
+        if state is not None and not merge.names.isdisjoint(self._env):
+            state.unsound.add(merge.stmt)
+        return node
 
     # E1 — names: substitute if bound, else leave free (function parameters,
     # references to `F`, user helper functions...).
@@ -197,12 +282,14 @@ class _Substituter(ast.NodeTransformer):
                     "Spark Columns can't handle chained comparisons; "
                     "rewrite `a < x < b` as `(a < x) & (x < b)`"
                 )
-            operands = [self.visit(node.left)] + [
-                self.visit(c) for c in node.comparators
-            ]
+            # each middle operand is substituted once per comparison, so
+            # the two uses are separate copies, not one shared node
+            operands = [node.left, *node.comparators]
             out: ast.expr | None = None
             for lhs, op, rhs in zip(operands, node.ops, operands[1:]):
-                pair: ast.expr = ast.Compare(left=lhs, ops=[op], comparators=[rhs])
+                pair: ast.expr = ast.Compare(
+                    left=self.visit(lhs), ops=[op], comparators=[self.visit(rhs)]
+                )
                 out = (
                     pair
                     if out is None
@@ -344,10 +431,54 @@ def _apply_if(node: Node, stmt: ast.If) -> Node:
     # lives in stmt.orelse and therefore nests inside `default`, giving the
     # nested (not flat) chain shape of the reference (main.py:275-289).
     test = substitute(stmt.test, node.env)
-    return Switch(
-        arms=[(test, compile_block(stmt.body, dict(node.env)))],
-        default=compile_block(stmt.orelse, dict(node.env)),
+    return _join(
+        [(test, _fold(stmt.body, dict(node.env)))],
+        _fold(stmt.orelse, dict(node.env)),
+        stmt,
     )
+
+
+def _join(arms: list[tuple[ast.expr, Node]], default: Node, stmt: ast.stmt) -> Node:
+    """The Switch of a conditional statement — or, when no branch returns
+    and ``stmt`` is not held path-split, one Open in which each variable a
+    branch rebinds is a when-chain over the branch values (nested for
+    ``if/elif``, flat for ``match``, as the Switch would print). A variable
+    a branch leaves unbound reads as the free name there, as it would on
+    that path."""
+    state = _fold_state.get()
+    branches = [sub for _, sub in arms] + [default]
+    if stmt in state.split or not all(isinstance(b, Open) for b in branches):
+        return Switch(arms=arms, default=default)
+    if arms:
+        state.merged.add(stmt)
+    envs = [b.env for b in branches]
+    env: dict[str, ast.expr] = {}
+    for name in dict.fromkeys(k for e in envs for k in e):
+        found = [e.get(name) for e in envs]
+        if all(v is found[0] for v in found):
+            env[name] = found[0]
+            continue
+        values = [ast.Name(id=name, ctx=ast.Load()) if v is None else v for v in found]
+        chain = when_chain([(t, v) for (t, _), v in zip(arms, values)], values[-1])
+        chain._sparkify_merge = _Merge(stmt, values, _read_names(values))
+        env[name] = chain
+    return Open(env)
+
+
+def _read_names(exprs: list[ast.expr]) -> frozenset[str]:
+    """The names ``exprs`` read; a nested merge contributes its own set."""
+    names: set[str] = set()
+    stack: list[ast.AST] = list(exprs)
+    while stack:
+        node = stack.pop()
+        merge = _merge_of(node)
+        if merge is not None:
+            names |= merge.names
+        elif isinstance(node, ast.Name):
+            names.add(node.id)
+        else:
+            stack.extend(ast.iter_child_nodes(node))
+    return frozenset(names)
 
 
 def _apply_return(node: Node, value: ast.expr) -> Node:
@@ -493,10 +624,10 @@ def _apply_match(node: Node, stmt: ast.Match) -> Node:
         arms.append(
             (
                 substitute(raw_test, node.env),
-                compile_block(case.body, dict(node.env)),
+                _fold(case.body, dict(node.env)),
             )
         )
-    return Switch(arms=arms, default=compile_block(default_body, dict(node.env)))
+    return _join(arms, _fold(default_body, dict(node.env)), stmt)
 
 
 # -- the block compiler -----------------------------------------------------
@@ -505,8 +636,27 @@ def _apply_match(node: Node, stmt: ast.Match) -> Node:
 def compile_block(stmts: list[ast.stmt], env: dict[str, ast.expr] | None = None) -> Node:
     """Fold a statement list into a branch tree (reference ``parse_body``,
     main.py:350-369). Statements after a block-level ``return`` are dead code
-    and skipped."""
-    node: Node = Open(env if env is not None else {})
+    and skipped.
+
+    Return-free conditionals are merged (S5); every merge the exactness
+    guard rejects is re-folded path-split, until none is rejected. Each
+    round splits at least one more statement, so the loop ends."""
+    split: frozenset = frozenset()
+    while True:
+        state = _FoldState(split, set(), set())
+        token = _fold_state.set(state)
+        try:
+            tree = _fold(stmts, dict(env or {}))
+        finally:
+            _fold_state.reset(token)
+        unsound = _unsound_merges(tree, state)
+        if not unsound:
+            return tree
+        split |= unsound
+
+
+def _fold(stmts: list[ast.stmt], env: dict[str, ast.expr]) -> Node:
+    node: Node = Open(env)
     for stmt in stmts:
         if isinstance(stmt, (ast.Assign, ast.AnnAssign)):
             node = _apply_assign(node, stmt)
@@ -542,3 +692,245 @@ def branch_tree_to_expr(node: Node) -> ast.expr:
             branch_tree_to_expr(node.default),
         )
     raise TranspileError("Not all branches return")
+
+
+# ---------------------------------------------------------------------------
+# Exactness guard for merged values (module docstring). Each node of the
+# folded DAG gets the classes of value it takes on the path split's paths —
+# a Python literal kind, a Column known to be double, or a Column of unknown
+# type — and the merges whose values reach it through consumers that keep
+# the result exact.
+# ---------------------------------------------------------------------------
+
+_COL, _DBL = "col", "double"  # a Column of unknown type; a DoubleType one
+_FLOAT, _INT, _BOOL, _STR = "float", "int", "bool", "str"  # Python values
+_ANY = "any"  # a Python value of unknown type: a global, a call's result
+_BAD = "bad"  # None, bytes and the like: never merged
+_NUMERIC = frozenset({_COL, _DBL, _FLOAT, _INT})
+_NO_MERGES: frozenset = frozenset()
+
+
+def _constant_class(value: object) -> str:
+    if isinstance(value, bool):
+        return _BOOL
+    if isinstance(value, int):
+        # beyond int32 Spark types the literal apart from Python's int
+        return _INT if -(2**31) <= value < 2**31 else _ANY
+    if isinstance(value, float):
+        return _FLOAT
+    if isinstance(value, str):
+        return _STR
+    return _BAD
+
+
+def _binop_class(a: str, b: str, op: ast.operator) -> str:
+    pair = {a, b}
+    if _BAD in pair:
+        return _BAD
+    if isinstance(op, (ast.Add, ast.Sub, ast.Mult)) and pair <= _NUMERIC:
+        if pair & {_COL, _DBL}:
+            # Spark computes a double wherever a double meets a number
+            return _DBL if pair & {_DBL, _FLOAT} else _COL
+        return _FLOAT if _FLOAT in pair else _ANY  # Python's ints are unbounded
+    if pair & {_COL, _DBL}:
+        return _COL
+    if isinstance(op, (ast.BitAnd, ast.BitOr)) and pair == {_BOOL}:
+        return _BOOL
+    return _ANY
+
+
+def _unary_class(a: str, op: ast.unaryop) -> str:
+    if isinstance(op, ast.Not):
+        return _COL if a in (_COL, _DBL) else _BOOL
+    if isinstance(op, ast.Invert):
+        return _COL if a in (_COL, _DBL) else _INT if a in (_INT, _BOOL) else _ANY
+    return _INT if a == _BOOL else a if a in (_NUMERIC | {_BAD}) else _ANY
+
+
+def _is_when_call(node: ast.expr) -> bool:
+    """``F.when(...)``, or ``.when(...)``/``.otherwise(...)`` on one."""
+    while (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("when", "otherwise")
+    ):
+        node = node.func.value
+        if isinstance(node, ast.Name):
+            return node.id == "F"
+    return False
+
+
+def _expr_children(node: ast.AST) -> list[ast.expr]:
+    out: list[ast.expr] = []
+    for _, value in ast.iter_fields(node):
+        for item in value if isinstance(value, list) else [value]:
+            if isinstance(item, ast.keyword):
+                item = item.value
+            if isinstance(item, ast.expr):
+                out.append(item)
+    return out
+
+
+class _Guard:
+    """One pass of the exactness guard over a folded tree's DAG."""
+
+    def __init__(self) -> None:
+        self.parameters = _parameters.get()
+        self.unsound: set[ast.stmt] = set()
+        self.reached: set[ast.stmt] = set()
+        self._seen: dict[int, tuple[frozenset[str], frozenset]] = {}
+
+    def info(self, node: ast.expr) -> tuple[frozenset[str], frozenset]:
+        """(value classes, merges reaching ``node``), memoized per node."""
+        hit = self._seen.get(id(node))
+        if hit is None:
+            hit = self._seen[id(node)] = self._info(node)
+        return hit
+
+    def _when_values(self, call: ast.Call) -> frozenset[str]:
+        """Visit a when-chain link and return the classes of the values the
+        chain can yield. The receiver is a method's consumer; the arguments
+        take any value."""
+        receiver = call.func.value
+        classes, merges = self.info(receiver)
+        self.unsound |= merges
+        args = [self.info(a)[0] for a in _expr_children(call)[1:]]
+        values = args[-1:] if call.func.attr == "when" else args
+        if not isinstance(receiver, ast.Name):
+            values.append(classes)
+        return frozenset().union(*values)
+
+    def _info(self, node: ast.expr) -> tuple[frozenset[str], frozenset]:
+        merge = _merge_of(node)
+        if merge is not None:
+            self._when_values(node)
+            self.reached.add(merge.stmt)
+            classes = frozenset().union(*(self.info(v)[0] for v in merge.values))
+            if _BAD in classes:
+                self.unsound.add(merge.stmt)
+            return classes, frozenset({merge.stmt})
+        if isinstance(node, ast.Constant):
+            return frozenset({_constant_class(node.value)}), _NO_MERGES
+        if isinstance(node, ast.Name):
+            column = self.parameters is None or node.id in self.parameters
+            return frozenset({_COL if column else _ANY}), _NO_MERGES
+        if _is_when_call(node):
+            values = self._when_values(node)
+            double = values <= {_DBL, _FLOAT}
+            return frozenset({_DBL if double else _COL}), _NO_MERGES
+        infos = [self.info(c) for c in _expr_children(node)]
+        merges = frozenset().union(*(m for _, m in infos))
+        classes = self._classes(node, [c for c, _ in infos])
+        if merges and not self._exact(node, infos):
+            self.unsound |= merges
+            merges = _NO_MERGES
+        return classes, merges
+
+    def _classes(self, node: ast.expr, operands: list[frozenset[str]]) -> frozenset[str]:
+        if isinstance(node, ast.BinOp):
+            a, b = operands
+            return frozenset(_binop_class(x, y, node.op) for x in a for y in b)
+        if isinstance(node, ast.UnaryOp):
+            return frozenset(_unary_class(x, node.op) for x in operands[0])
+        if isinstance(node, ast.Compare):
+            a, b = operands
+            return frozenset(
+                _COL if {x, y} & {_COL, _DBL} else _BOOL for x in a for y in b
+            )
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            receiver = node.func.value
+            if (isinstance(receiver, ast.Name) and receiver.id == "F") or self.info(
+                receiver
+            )[0] <= {_COL, _DBL}:
+                return frozenset({_COL})  # an F.* function or a Column method
+        if isinstance(node, ast.Attribute) and operands[0] <= {_COL, _DBL}:
+            return frozenset({_COL})
+        return frozenset({_ANY})
+
+    @staticmethod
+    def _exact(node: ast.expr, infos: list[tuple[frozenset[str], frozenset]]) -> bool:
+        """Whether ``node`` on merged operands equals the path split."""
+        if isinstance(node, ast.Compare):
+            # the merged branch values share one kind (branches of
+            # different types would be widened before the comparison
+            # instead of after it), which the other side must match
+            merged = frozenset().union(*(c for c, m in infos if m))
+            if not any(merged <= k for k in ({_DBL, _FLOAT}, {_INT}, {_STR}, {_BOOL})):
+                return False
+            literals = frozenset().union(*(c for c, _ in infos)) - {_COL, _DBL}
+            return any(literals <= ok for ok in ({_FLOAT, _INT}, {_STR}, {_BOOL}))
+        op = getattr(node, "op", None)
+        if isinstance(op, (ast.BitAnd, ast.BitOr)):
+            return all(c <= {_COL, _BOOL} for c, _ in infos)
+        if isinstance(op, ast.Invert):
+            return all(c <= {_COL} for c, _ in infos)  # ~True == -2
+        if isinstance(op, (ast.Add, ast.Sub, ast.Mult, ast.UAdd, ast.USub)):
+            # only doubles: Python's ints are unbounded, its bools add as
+            # ints, and an int Column widened before the arithmetic would
+            # no longer overflow or round as its path did
+            return all(c <= ({_DBL, _FLOAT} if m else _NUMERIC) for c, m in infos)
+        return False
+
+
+def _unsound_merges(tree: Node, state: _FoldState) -> set[ast.stmt]:
+    """The statements whose merges the exactness guard rejects in ``tree``
+    (its returned values and Switch tests are the DAG's roots), plus those
+    :func:`_fold` flagged, plus every merged statement no root reaches:
+    split, it adds ``F.when(c, e).otherwise(e)``, a Column even where
+    ``e`` is a Python value."""
+    guard = _Guard()
+
+    def walk(node: Node) -> None:
+        if isinstance(node, Leaf):
+            guard.info(node.expr)
+        elif isinstance(node, Switch):
+            for test, sub in node.arms:
+                guard.info(test)
+                walk(sub)
+            walk(node.default)
+
+    walk(tree)
+    return guard.unsound | state.unsound | (state.merged - guard.reached)
+
+
+def _hoist_shared(expr: ast.expr, taken: set[str]) -> list[ast.stmt]:
+    """Bind every compound node ``expr`` reaches more than once to a local
+    ``_sparkify_t<k>`` (numbered in evaluation order, skipping the names in
+    ``taken``) and return those assignments; single-use nodes stay inline.
+    Rewrites ``expr`` in place, so the source grows with the DAG, not with
+    its unfolded tree."""
+    uses: dict[int, int] = {}
+    order: list[ast.expr] = []  # each node once, after its children
+
+    def visit(node: ast.expr) -> None:
+        for child in _expr_children(node):
+            uses[id(child)] = uses.get(id(child), 0) + 1
+            if uses[id(child)] == 1:
+                visit(child)
+        order.append(node)
+
+    visit(expr)
+    temps: dict[int, str] = {}
+
+    def ref(node: ast.AST) -> ast.AST:
+        name = temps.get(id(node))
+        return node if name is None else ast.Name(id=name, ctx=ast.Load())
+
+    body: list[ast.stmt] = []
+    k = 0
+    for node in order:
+        for field, value in ast.iter_fields(node):
+            if isinstance(value, ast.expr):
+                setattr(node, field, ref(value))
+            elif isinstance(value, list):
+                setattr(node, field, [ref(v) for v in value])
+                for v in value:
+                    if isinstance(v, ast.keyword):
+                        v.value = ref(v.value)
+        if uses.get(id(node), 0) > 1 and not isinstance(node, (ast.Name, ast.Constant)):
+            while f"_sparkify_t{k}" in taken:
+                k += 1
+            temps[id(node)] = name = f"_sparkify_t{k}"
+            k += 1
+            body.append(ast.Assign(targets=[ast.Name(id=name, ctx=ast.Store())], value=node))
+    return body

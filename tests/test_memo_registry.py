@@ -118,7 +118,7 @@ class _NoopSpark:
     [
         ("dedup", {"dedup", "span_plan", "simhash_handle"}),
         ("ann", {"ann"}),
-        ("all", set(FAMILIES) - {"knn_index"}),
+        ("all", set(FAMILIES) - {"knn_index", "jsonl_export"}),
     ],
 )
 def test_release_scope_drops_exactly_its_families(scope, dropped):
@@ -140,6 +140,72 @@ def test_release_scope_drops_exactly_its_families(scope, dropped):
                 fam.memo.extend(saved[name])
             else:
                 fam.memo.update(saved[name])
+
+
+def test_jsonl_export_keys_build_concurrently_and_outlive_all(records):
+    import threading
+
+    from polarify_spark.operators import release_shared_caches
+
+    fam = FAMILIES["jsonl_export"]
+    assert (fam.by, fam.scopes) == ("key", ())
+    # each build waits for the other: two keys that serialized on one
+    # lock would break the barrier instead
+    barrier = threading.Barrier(2, timeout=10)
+    out: dict = {}
+
+    def export(key):
+        def build():
+            barrier.wait()
+            return f"/exports/{key}"
+
+        out[key] = fam.get(None, key, build)
+
+    try:
+        threads = [threading.Thread(target=export, args=(k,)) for k in ("a", "b")]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=20)
+        assert not any(t.is_alive() for t in threads)
+        assert out == {"a": "/exports/a", "b": "/exports/b"}
+        assert sorted(r.key for r in records() if r.family == "jsonl_export") == [
+            "a",
+            "b",
+        ]
+        release_shared_caches(_NoopSpark(), scope="all")
+        assert {"a", "b"} <= set(fam.memo)
+    finally:
+        fam.memo.pop("a", None)
+        fam.memo.pop("b", None)
+
+
+def test_jsonl_export_dirs_are_reaped_unless_in_flight(tmp_path):
+    import threading
+
+    from polarify_spark.streaming import jobs
+
+    fam = FAMILIES["jsonl_export"]
+    trimmed, live, busy = (tmp_path / n for n in ("trimmed", "live", "busy"))
+    for d in (trimmed, live, busy):
+        d.mkdir()
+    saved = list(jobs._JSONL_EXPORT_DIRS)
+    jobs._JSONL_EXPORT_DIRS[:] = [
+        ("sf", str(trimmed)),  # the cap dropped its memo entry
+        ("sf", str(live)),
+        ("sf_busy", str(busy)),
+    ]
+    fam.memo["sf"] = (None, str(live))
+    fam.locks.setdefault("sf", threading.Lock())
+    busy_lock = fam.locks.setdefault("sf_busy", threading.Lock())
+    try:
+        with busy_lock:  # an export of sf_busy is in flight
+            jobs._reap_jsonl_exports()
+        assert not trimmed.exists() and not live.exists() and "sf" not in fam.memo
+        assert busy.exists() and jobs._JSONL_EXPORT_DIRS == [("sf_busy", str(busy))]
+    finally:
+        jobs._JSONL_EXPORT_DIRS[:] = saved
+        fam.memo.pop("sf", None)
 
 
 def test_plan_family_durable_dir_is_named_by_the_corpus_key(

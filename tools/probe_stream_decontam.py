@@ -218,8 +218,7 @@ def run_rep() -> dict:
         return {"stages": stages}
     finally:
         # the per-process JSONL export dir is this child's to reap
-        for d in stream_jobs._JSONL_EXPORT_DIRS.values():
-            shutil.rmtree(d, ignore_errors=True)
+        stream_jobs._reap_jsonl_exports()
         spark.stop()
 
 
