@@ -4,6 +4,9 @@
 ``oracle_sql()`` expose every implemented operator (SURVEY.md section 2 plus
 the extension operator set) for the sf0.01 DuckDB correctness gate.
 
+``session(cpus, memory, **conf)`` is the one ``SparkSession`` config that
+``bench.py``, ``tests/conftest.py`` and ``tools/`` share.
+
 Query registries live next to the operators they exercise:
   - ``polarify_spark.queries.CORE_QUERIES``        — transpiler Q1-Q12
   - ``polarify_spark.operators.*.QUERIES``         — dedup / similarity /
@@ -349,6 +352,32 @@ def _registries() -> dict[str, tuple[Callable, str | None]]:
         return float(green)
 
     return dict(sorted(merged.items(), key=sort_key))
+
+
+def session(cpus: int | str, memory: str, **conf: str) -> SparkSession:
+    """The local session every caller shares: ``local[cpus]`` with one
+    shuffle partition per core, AQE and Arrow on, no UI, ANSI SQL (the
+    PySpark 4 default, pinned so 3.5 means the same thing: int64 overflow
+    raises instead of wrapping) and a UTC session timezone, so
+    date->timestamp promotions agree with the naive/UTC DuckDB oracle
+    whatever the host timezone. Only the core count and driver memory vary
+    by caller; any other key (``spark.app.name``, say) passes through
+    ``conf``, spelled ``**{"spark.key": value}``."""
+    settings = {
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.ansi.enabled": "true",
+        "spark.driver.memory": memory,
+        **conf,
+    }
+    return (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config(map=settings)
+        .getOrCreate()
+    )
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -248,33 +248,25 @@ def _detail_paths(repo_root: Path, cpus: str) -> list[Path]:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry_mod
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("polarify-spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
+    spark = entry_mod.session(
+        CPUS,
         # sized well above the workload: the query sweep accumulates cached
-        # tables and localCheckpoint blocks across the whole query registry, and a tight
-        # heap shows up as multi-second GC spikes attributed to whichever
-        # query is running when the collector fires
-        .config("spark.driver.memory", "32g")
-        # the sweep churns ~130 queries' localCheckpoint blocks through one
-        # JVM; ContextCleaner only frees a block after a DRIVER GC proves
-        # the RDD unreachable, and with a 32 g heap a full GC can be tens
-        # of queries away — dead blocks then pile up and inflate whichever
-        # query runs late in a family (r7: repeated_spans 17.6 s in-sweep
-        # vs 1.2 s standalone). A 30 s periodic GC bounds that drift.
-        .config("spark.cleaner.periodicGC.interval", "30s")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # date->timestamp promotions must agree with the (naive/UTC) DuckDB
-        # oracle regardless of host timezone
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+        # tables and localCheckpoint blocks across the whole query registry,
+        # and a tight heap shows up as multi-second GC spikes attributed to
+        # whichever query is running when the collector fires
+        "32g",
+        **{
+            "spark.app.name": "polarify-spark-bench",
+            # the sweep churns ~130 queries' localCheckpoint blocks through one
+            # JVM; ContextCleaner only frees a block after a DRIVER GC proves
+            # the RDD unreachable, and with a 32 g heap a full GC can be tens
+            # of queries away — dead blocks then pile up and inflate whichever
+            # query runs late in a family (r7: repeated_spans 17.6 s in-sweep
+            # vs 1.2 s standalone). A 30 s periodic GC bounds that drift.
+            "spark.cleaner.periodicGC.interval": "30s",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -349,15 +349,15 @@ ARTIFACTS_DIR_CONF = "spark.polarify.artifacts.dir"
 
 #: storage level for localCheckpoint-backed memo artifacts: SERIALIZED
 #: memory+disk, not Spark's localCheckpoint default (deserialized row
-#: objects). Measured at R=100 (tools/probe_spans_steady.py, SCALE.md
-#: round 11): the ~35M-row window table held as deserialized rows is the
-#: r10 "spans steady 2.4-9.6 s" variance — steady walls [3.6, 10.8] s,
-#: +/-38-79% of median, fill 27-40 s, all driver-heap GC; serialized
-#: bytes give steady 2.2-2.8 s within +/-19% of median and fill 11-15 s.
-#: Small artifacts (span set, pair tables) stay in memory as compact
-#: bytes; only the corpus-positional tables spill. Module-global (not
-#: per-call) so the scale probe can A/B it; ``None`` = Spark's default
-#: (deserialized), kept reachable for the probe's baseline arm.
+#: objects). Measured at R=100 (SCALE.md round 11): the ~35M-row window
+#: table held as deserialized rows is the r10 "spans steady 2.4-9.6 s"
+#: variance — steady walls [3.6, 10.8] s, +/-38-79% of median, fill
+#: 27-40 s, all driver-heap GC; serialized bytes give steady 2.2-2.8 s
+#: within +/-19% of median and fill 11-15 s. Small artifacts (span set,
+#: pair tables) stay in memory as compact bytes; only the
+#: corpus-positional tables spill. Module-global (not per-call) so a
+#: probe can A/B it; ``None`` = Spark's default (deserialized), kept
+#: reachable for such a probe's baseline arm.
 _CHECKPOINT_STORAGE = _StorageLevel.MEMORY_AND_DISK
 
 #: commit marker created by :func:`materialize`'s durable publish, via

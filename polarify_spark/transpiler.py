@@ -17,7 +17,11 @@ Semantics implemented (SURVEY.md section 2 numbering):
 
 * S1-S4  assignments (plain / annotated / multi-target / destructuring) with
   eager forward-substitution into an env of fully-inlined expressions
-  (reference ``main.py:138-157,264-266``).
+  (reference ``main.py:138-157,264-266``). Deviation: a name reads the value
+  it was bound to, where the reference substitutes every use again, so a
+  parameter rebound later reached back into values computed before it
+  (``s = x * 2.0; x = 1.0; return s`` returned ``1.0 * 2.0``) and
+  ``x = x + 1`` recursed without end.
 * S5     ``if/elif/else`` -> *nested* conditional tree (reference
   ``main.py:275-289``). An ``if`` (or ``match``, S8) in which no branch
   returns is collapsed back into straight-line code: each variable some
@@ -52,14 +56,12 @@ side matches; an ``F.when``/``otherwise`` argument; or the returned value.
 A branch value holding ``None`` or bytes keeps the split, as does every other
 consumer (``/ // % **``, builtins such as ``abs``, methods, ``F.*`` calls:
 ``F.upper(t)`` reads a str as a column name), as does a merge that no
-returned value reads or whose branch values read a name rebound later.
+returned value reads.
 Parameters are taken for Columns and any other name the body never binds
 (a global) for a Python value of unknown type; the low-level API, which
 sees no signature, takes every such name for a parameter (``_parameters``).
 The check runs on the folded DAG; a failing statement is re-folded
-path-split (:func:`compile_block`). A merge also turns some programs that raised at
-call time into working ones: a test that the path split folded to a Python
-bool, which ``F.when`` rejects, becomes a Column. Residual: Catalyst still
+path-split (:func:`compile_block`). Residual: Catalyst still
 unfolds the shared subtrees into the plan, and it may fold a ``CASE WHEN``
 whose branches reduce to ``0.0`` and ``-0.0`` into one, so the sign of a
 zero can differ where the two forms fold differently.
@@ -170,7 +172,6 @@ class _Merge:
 
     stmt: ast.stmt  # the If/Match it merges; re-folded path-split if unsound
     values: list[ast.expr]  # the branch values: one per arm, then the default
-    names: frozenset[str]  # the names those values read
 
 
 def _merge_of(node: ast.AST) -> _Merge | None:
@@ -182,7 +183,6 @@ class _FoldState:
     """One fold attempt of :func:`compile_block`."""
 
     split: frozenset  # If/Match statements that must stay path-split
-    unsound: set  # merges found unsound while folding
     merged: set  # statements collapsed by this attempt
 
 
@@ -199,36 +199,26 @@ _fold_state: contextvars.ContextVar[_FoldState | None] = contextvars.ContextVar(
 
 
 class _Substituter(ast.NodeTransformer):
-    """Replace bound names by their defining expressions, recursively.
+    """Replace bound names by their defining expressions.
 
-    Substitution is eager and repeated (a substituted expression is itself
-    re-visited), so the env always holds closed forms over the function's
-    parameters and free globals. Operates on a fresh copy of the input tree so
-    stored env expressions are never aliased into the output — except merged
-    values (S5), which are returned as the same node so that each later use
-    shares one subtree instead of copying it.
+    Substitution is eager: every env value was substituted when it was
+    bound, so it is a closed form over the function's parameters and free
+    globals, and a bound name is replaced by a copy of it as it stands — a
+    name rebound since then must not reach back into it. Builds a fresh
+    tree so stored env expressions are never aliased into the output —
+    except merged values (S5), which stay the same node so that each later
+    use shares one subtree instead of copying it.
     """
 
     def __init__(self, env: dict[str, ast.expr]):
         self._env = env
-
-    def visit(self, node: ast.AST) -> ast.AST:
-        merge = _merge_of(node)
-        if merge is None:
-            return super().visit(node)
-        # Re-visiting a copy would substitute names bound since the merge;
-        # sharing the node does not, so such a merge must stay path-split.
-        state = _fold_state.get()
-        if state is not None and not merge.names.isdisjoint(self._env):
-            state.unsound.add(merge.stmt)
-        return node
 
     # E1 — names: substitute if bound, else leave free (function parameters,
     # references to `F`, user helper functions...).
     def visit_Name(self, node: ast.Name) -> ast.expr:
         bound = self._env.get(node.id)
         if bound is not None:
-            return self.visit(bound)
+            return _fresh(bound)
         return node
 
     # E2 / E3 — arithmetic & bitwise operators; every ast binop/unaryop is
@@ -335,6 +325,20 @@ class _Substituter(ast.NodeTransformer):
         )
 
 
+def _fresh(node: ast.AST) -> ast.AST:
+    """A copy of ``node`` that shares its merged subtrees."""
+    if _merge_of(node) is not None:
+        return node
+    copy = type(node)()
+    for field, value in ast.iter_fields(node):
+        if isinstance(value, list):
+            value = [_fresh(v) if isinstance(v, ast.AST) else v for v in value]
+        elif isinstance(value, ast.AST):
+            value = _fresh(value)
+        setattr(copy, field, value)
+    return copy
+
+
 def substitute(expr: ast.expr, env: dict[str, ast.expr]) -> ast.expr:
     """Return ``expr`` with every env-bound name replaced by its definition."""
     out = _Substituter(env).visit(expr)
@@ -351,11 +355,21 @@ def substitute(expr: ast.expr, env: dict[str, ast.expr]) -> ast.expr:
 
 
 def when_chain(arms: list[tuple[ast.expr, ast.expr]], default: ast.expr) -> ast.Call:
-    """Build the AST for ``F.when(t1, v1).when(t2, v2)...otherwise(default)``."""
+    """Build the AST for ``F.when(t1, v1).when(t2, v2)...otherwise(default)``.
+    A test that reads no name folded to a Python value on its path (``1.0 >
+    0``); ``F.when`` takes only a Column, so it goes in ``F.lit``."""
     if not arms:
         raise TranspileError("when_chain needs at least one (test, value) arm")
     chain: ast.expr = ast.Name(id="F", ctx=ast.Load())
     for test, value in arms:
+        if not any(isinstance(n, ast.Name) for n in ast.walk(test)):
+            test = ast.Call(
+                func=ast.Attribute(
+                    value=ast.Name(id="F", ctx=ast.Load()), attr="lit", ctx=ast.Load()
+                ),
+                args=[test],
+                keywords=[],
+            )
         chain = ast.Call(
             func=ast.Attribute(value=chain, attr="when", ctx=ast.Load()),
             args=[test, value],
@@ -460,25 +474,9 @@ def _join(arms: list[tuple[ast.expr, Node]], default: Node, stmt: ast.stmt) -> N
             continue
         values = [ast.Name(id=name, ctx=ast.Load()) if v is None else v for v in found]
         chain = when_chain([(t, v) for (t, _), v in zip(arms, values)], values[-1])
-        chain._sparkify_merge = _Merge(stmt, values, _read_names(values))
+        chain._sparkify_merge = _Merge(stmt, values)
         env[name] = chain
     return Open(env)
-
-
-def _read_names(exprs: list[ast.expr]) -> frozenset[str]:
-    """The names ``exprs`` read; a nested merge contributes its own set."""
-    names: set[str] = set()
-    stack: list[ast.AST] = list(exprs)
-    while stack:
-        node = stack.pop()
-        merge = _merge_of(node)
-        if merge is not None:
-            names |= merge.names
-        elif isinstance(node, ast.Name):
-            names.add(node.id)
-        else:
-            stack.extend(ast.iter_child_nodes(node))
-    return frozenset(names)
 
 
 def _apply_return(node: Node, value: ast.expr) -> Node:
@@ -643,7 +641,7 @@ def compile_block(stmts: list[ast.stmt], env: dict[str, ast.expr] | None = None)
     round splits at least one more statement, so the loop ends."""
     split: frozenset = frozenset()
     while True:
-        state = _FoldState(split, set(), set())
+        state = _FoldState(split, set())
         token = _fold_state.set(state)
         try:
             tree = _fold(stmts, dict(env or {}))
@@ -874,8 +872,8 @@ class _Guard:
 
 def _unsound_merges(tree: Node, state: _FoldState) -> set[ast.stmt]:
     """The statements whose merges the exactness guard rejects in ``tree``
-    (its returned values and Switch tests are the DAG's roots), plus those
-    :func:`_fold` flagged, plus every merged statement no root reaches:
+    (its returned values and Switch tests are the DAG's roots), plus every
+    merged statement no root reaches:
     split, it adds ``F.when(c, e).otherwise(e)``, a Column even where
     ``e`` is a Python value."""
     guard = _Guard()
@@ -890,7 +888,7 @@ def _unsound_merges(tree: Node, state: _FoldState) -> set[ast.stmt]:
             walk(node.default)
 
     walk(tree)
-    return guard.unsound | state.unsound | (state.merged - guard.reached)
+    return guard.unsound | (state.merged - guard.reached)
 
 
 def _hoist_shared(expr: ast.expr, taken: set[str]) -> list[ast.stmt]:

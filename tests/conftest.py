@@ -3,24 +3,10 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    import __spark_entry__
 
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("polarify-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # date->timestamp promotions must agree with the (naive/UTC) DuckDB
-        # oracle regardless of host timezone
-        .config("spark.sql.session.timeZone", "UTC")
-        # int64-boundary tests (test_engine_hypothesis) expect overflow to
-        # raise, the Spark 4 default; pin it so the suite means the same
-        # thing on pyspark 3.5 where ANSI is off and overflow wraps
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    session = __spark_entry__.session(
+        4, "4g", **{"spark.app.name": "polarify-spark-tests"}
     )
     yield session
     session.stop()

@@ -2,7 +2,8 @@
 evaluated row-wise in pure Python.
 
 The transpiler emits ``F.when(cond, val).when(...).otherwise(val)`` where the
-only ``F`` members used are ``when``. When every input is a plain Python
+only ``F`` members used are ``when`` and ``lit`` (around a test that folded to
+a Python value). When every input is a plain Python
 scalar, conditions evaluate to real booleans, so a tiny first-match-wins
 evaluator reproduces Spark ``CaseWhen`` semantics exactly (for non-null
 inputs). This lets hypothesis drive thousands of examples per corpus function
@@ -35,6 +36,10 @@ class ScalarF:
     @staticmethod
     def when(cond: Any, value: Any) -> _ScalarCase:
         return _ScalarCase(((cond, value),))
+
+    @staticmethod
+    def lit(value: Any) -> Any:
+        return value
 
 
 def run_scalar(generated_source: str, func_name: str, host_globals: dict, *args: Any) -> Any:

@@ -261,6 +261,17 @@ def parameter_rebound_after_merge(x):
     return s + x
 
 
+def parameter_rebound_after_use(x):
+    s = x * 2.0
+    x = 1.0
+    return s
+
+
+def parameter_rebound_from_itself(x):
+    x = x + 1
+    return x * 2
+
+
 def merge_never_read(x):
     s = 0
     if x > 0:
@@ -288,9 +299,9 @@ PATH_SPLIT = [
         "F.when(x > 0, F.when(x > 5, x * 2).otherwise(x))"
         ".otherwise(F.when(x > 5, x * 2).otherwise(None))",
     ),
-    # the path split substitutes the rebound parameter into the branch
-    # values (reference behaviour); a shared merged node would not
-    (parameter_rebound_after_merge, "F.when(x > 0, 1.0 * 2.0 + 1.0).otherwise(0.0 + 1.0)"),
+    # a parameter rebound after the merge does not reach back into the
+    # branch values, so nothing forces the split and the merge is kept
+    (parameter_rebound_after_merge, "F.when(x > 0, x * 2.0).otherwise(0.0) + 1.0"),
     # merged and never read, the `if` would vanish and leave a Python int
     (merge_never_read, "F.when(x > 0, 3).otherwise(3)"),
     # a Column of unknown type would be widened before the arithmetic
@@ -305,6 +316,18 @@ def test_fallbacks_keep_the_path_split():
             "    from pyspark.sql import functions as F",
             f"    return {expected}",
         ], fn.__name__
+
+
+def test_rebound_parameter_keeps_earlier_values():
+    for fn in (
+        parameter_rebound_after_merge,
+        parameter_rebound_after_use,
+        parameter_rebound_from_itself,
+    ):
+        generated = transform_func_to_new_source(fn)
+        for x in (-2.5, 0.0, 3.0):
+            got = run_scalar(generated, fn.__name__ + _SUFFIX, {}, x)
+            assert got == fn(x), (generated, x)
 
 
 # --- engine check -------------------------------------------------------------
@@ -356,6 +379,16 @@ def _path_split(cols: dict, k: int = 0, s: float = 0.0):
     )
 
 
+def literal_test(x):
+    if x > 0:
+        s = 1.0
+    else:
+        s = x
+    if s > 0:
+        return 1
+    return 0
+
+
 def test_collapsed_column_equals_the_path_split(spark):
     assert eight_rules.__wrapped_source__.count("F.when(") == 8
     df = spark.range(20_000).select(
@@ -369,3 +402,7 @@ def test_collapsed_column_equals_the_path_split(spark):
     assert merged.schema["s"].dataType == split.schema["s"].dataType
     assert merged.exceptAll(split).count() == 0
     assert split.exceptAll(merged).count() == 0
+    # on the x > 0 path the split folds `s > 0` to `1.0 > 0`, a Python bool
+    # that F.when takes only inside F.lit
+    one = spark.range(1).select(sparkify(literal_test)(F.col("id") + 1.0).alias("v"))
+    assert one.first().v == literal_test(1.0)

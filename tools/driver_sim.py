@@ -21,7 +21,6 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from pyspark.sql import SparkSession
 import __spark_entry__ as e
 
 OUT = None
@@ -53,14 +52,7 @@ if args:  # optional filter: tools/driver_sim.py name1 name2 ...
         sys.exit(f"unknown query names {unknown}; see __spark_entry__.queries()")
     q = {k: v for k, v in q.items() if k in want}
 
-spark = (SparkSession.builder.master("local[16]")
-         .config("spark.ui.enabled","false")
-         .config("spark.sql.shuffle.partitions","16")
-         .config("spark.sql.session.timeZone","UTC")
-         .config("spark.sql.ansi.enabled","true")
-         .config("spark.driver.memory","8g")
-         .config("spark.sql.execution.arrow.pyspark.enabled","true")
-         .getOrCreate())
+spark = e.session(16, "8g")
 spark.sparkContext.setLogLevel("ERROR")
 if DURABLE:
     from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF

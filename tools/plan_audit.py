@@ -156,17 +156,9 @@ def main() -> None:
     ap.add_argument("--markdown", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    import __spark_entry__
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("polarify-spark-plan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = __spark_entry__.session(8, "1g")
     spark.sparkContext.setLogLevel("ERROR")
 
     rows, hard_fails = audit_registry(spark)

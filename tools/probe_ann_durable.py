@@ -44,19 +44,10 @@ def run_arm(arm: str, factor: int, runs: int, op: str = "pq") -> dict:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
-
+    import __spark_entry__
     from polarify_spark.operators import release_shared_caches, similarity
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName(f"probe-ann-durable-{os.getpid()}")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = __spark_entry__.session(CPUS, "24g")
     spark.sparkContext.setLogLevel("ERROR")
     from scale_probe import build_scaled
 

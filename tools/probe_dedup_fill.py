@@ -9,8 +9,8 @@ in the cold fill the variance lives, not whether the steady plans
 regressed. This probe decomposes the family's dominant fill chain —
 the shared pairwise-Jaccard memo, the connected-components build over
 it, the quality-score artifact, and the final keeper pick — one fresh
-JVM per rep (same isolation rationale as probe_pairwise_fill), so the
-per-stage spread over byte-identical code is measured directly:
+JVM per rep, so no rep inherits another's JIT, caches or heap state and
+the per-stage spread over byte-identical code is measured directly:
 
     python tools/probe_dedup_fill.py            # parent: N reps
     python tools/probe_dedup_fill.py child      # one rep, fresh JVM
@@ -39,27 +39,14 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 REPS = int(os.environ.get("PROBE_REPS", "3"))
 
 
-def _session():
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName(f"probe-dedup-fill-{os.getpid()}")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
 def run_rep() -> dict:
     from polarify_spark.operators import dedup
     from polarify_spark.operators.text import quality_score
 
+    import __spark_entry__
     from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF
 
-    spark = _session()
+    spark = __spark_entry__.session(CPUS, "16g")
     try:
         # the bench's pass-1 fills are session-local localCheckpoint
         # memos (no durable dir); force that here too so an ambient

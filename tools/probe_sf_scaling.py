@@ -41,22 +41,6 @@ if _REPO not in sys.path:
 PROBES = ("anchored", "ngram", "lsh", "pq_encode", "bm25", "spine", "bpe_encode")
 
 
-def _session(cpus: str):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"probe-sf-scaling-{os.getpid()}")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
 def run_child(cpus: str, sf_dir: str) -> None:
     from pyspark.sql import functions as F
 
@@ -64,7 +48,7 @@ def run_child(cpus: str, sf_dir: str) -> None:
     from polarify_spark.operators import dedup
     from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF, DEDUP
 
-    spark = _session(cpus)
+    spark = entry_mod.session(cpus, "24g")
     spark.sparkContext.setLogLevel("ERROR")
     try:
         try:
@@ -142,8 +126,10 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from scale_probe import build_scaled
 
+    import __spark_entry__
+
     # build (or reuse) the replicated inputs with a full-width session
-    build_spark = _session("32")
+    build_spark = __spark_entry__.session(32, "24g")
     build_spark.sparkContext.setLogLevel("ERROR")
     sf_dir = build_scaled(build_spark, args.factor)
     build_spark.stop()

@@ -96,20 +96,6 @@ def capture_sink_dirs(into: "list[str]"):
         tempfile.mkdtemp = real_mkdtemp
 
 
-def _session():
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName(f"probe-stream-decontam-{os.getpid()}")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
 def run_rep() -> dict:
     import shutil
 
@@ -129,9 +115,10 @@ def run_rep() -> dict:
         DECONTAM_EVAL_MOD,
         _decontam_grams,
     )
+    import __spark_entry__
     from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF
 
-    spark = _session()
+    spark = __spark_entry__.session(CPUS, "16g")
     try:
         # bench's queries_steady pays session-local localCheckpoint
         # memos (no durable dir); force that here too so an ambient

@@ -509,14 +509,9 @@ def main(argv: "list[str] | None" = None) -> int:
     fs = None
     spark = None
     if args.hadoop:
-        from pyspark.sql import SparkSession
+        import __spark_entry__
 
-        spark = (
-            SparkSession.builder.master("local[1]")
-            .appName("polarify-prune-artifacts")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
-        )
+        spark = __spark_entry__.session(1, "1g")
         fs = HadoopFS(spark, args.dir)
     try:
         report = prune_artifacts(

@@ -156,20 +156,9 @@ def main() -> None:
     factors = [int(f) for f in args.factors.split(",")]
     PROBES = [p for p in args.probes.split(",") if p]
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry_mod
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("polarify-spark-scale-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = entry_mod.session(32, "24g")
     spark.sparkContext.setLogLevel("ERROR")
     registry = entry_mod.queries()
 
