@@ -27,10 +27,11 @@ Semantics implemented (SURVEY.md section 2 numbering):
   returns is collapsed back into straight-line code: each variable some
   branch rebinds becomes one ``F.when`` over the branch values, so ``n``
   sequential ``if``s emit ``n`` ``F.when`` instead of the reference's
-  ``2^n - 1``. The collapse is kept only where the exactness guard below
-  proves it equal to the reference's path split, which distributes every
-  later statement into every open leaf and stays the one fallback
-  (branches that return always take it).
+  ``2^n - 1``, and an accumulator (``s = s + w``) reads its previous value
+  once (factored accumulators, below). The collapse is kept only where
+  the exactness guard below proves it equal to the reference's path split,
+  which distributes every later statement into every open leaf and stays
+  the one fallback (branches that return always take it).
 * S6/S7  early/partial ``return``; bare ``return`` rejected
   (reference ``main.py:291-299,360-361``).
 * S8     ``match`` -> *flat* multi-arm conditional (reference
@@ -61,10 +62,25 @@ Parameters are taken for Columns and any other name the body never binds
 (a global) for a Python value of unknown type; the low-level API, which
 sees no signature, takes every such name for a parameter (``_parameters``).
 The check runs on the folded DAG; a failing statement is re-folded
-path-split (:func:`compile_block`). Residual: Catalyst still
-unfolds the shared subtrees into the plan, and it may fold a ``CASE WHEN``
-whose branches reduce to ``0.0`` and ``-0.0`` into one, so the sign of a
-zero can differ where the two forms fold differently.
+path-split (:func:`compile_block`).
+
+Factored accumulators. A when-chain reads the pre-branch value ``base`` in
+every branch (``F.when(c, s + w).otherwise(s)``), and Catalyst unfolds such
+shared reads back into a tree of size ``2^n`` over ``n`` rules. So when
+every branch value of an accepted merge is ``base`` or ``base OP e_i``, with
+one ``OP`` of ``+ - *``, the merge is emitted as ``base OP F.when(c_1,
+e_1)...otherwise(identity)``, the identity being ``-0.0`` for ``+``,
+``0.0`` for ``-`` and ``1.0`` for ``*``: ``x + -0.0``, ``x - 0.0`` and
+``x * 1.0`` return ``x`` bit for bit, for ``-0.0``, NaN, ±inf and null too.
+``base`` is then read once and the plan stays linear. It is done only
+where exact: ``base`` and every ``e_i`` are doubles or floats (the guard's
+classes), and under ``+``/``-`` no ``e_i`` may fold to a ``±0.0`` literal,
+since Catalyst's literal equality takes ``0.0 == -0.0`` and would collapse
+``CASE WHEN c THEN 0.0 ELSE -0.0`` into one value. Every other merge keeps
+its when-chain (:func:`branch_tree_to_expr`). Residual, as in the path
+split: Catalyst may fold a ``CASE WHEN`` whose branches reduce to ``0.0``
+and ``-0.0`` into one, so the sign of a zero computed from literals alone
+can differ from Python's.
 
 This module imports only the stdlib — never pyspark — so transpilation is
 unit-testable without a SparkSession (mirrors reference ``main.py:1-7``).
@@ -171,7 +187,9 @@ class _Merge:
     """What a merged variable's when-chain was built from."""
 
     stmt: ast.stmt  # the If/Match it merges; re-folded path-split if unsound
+    tests: list[ast.expr]  # the arm tests, as given to `when_chain`
     values: list[ast.expr]  # the branch values: one per arm, then the default
+    base: ast.expr | None  # the value before the statement; None if unbound
 
 
 def _merge_of(node: ast.AST) -> _Merge | None:
@@ -356,13 +374,14 @@ def substitute(expr: ast.expr, env: dict[str, ast.expr]) -> ast.expr:
 
 def when_chain(arms: list[tuple[ast.expr, ast.expr]], default: ast.expr) -> ast.Call:
     """Build the AST for ``F.when(t1, v1).when(t2, v2)...otherwise(default)``.
-    A test that reads no name folded to a Python value on its path (``1.0 >
-    0``); ``F.when`` takes only a Column, so it goes in ``F.lit``."""
+    A test that reads no parameter folded to a Python value on its path
+    (``1.0 > 0``) or reads only globals (``LIMIT > 2``); ``F.when`` takes
+    only a Column, so it goes in ``F.lit``, which returns a Column as is."""
     if not arms:
         raise TranspileError("when_chain needs at least one (test, value) arm")
     chain: ast.expr = ast.Name(id="F", ctx=ast.Load())
     for test, value in arms:
-        if not any(isinstance(n, ast.Name) for n in ast.walk(test)):
+        if not _reads_parameter(test):
             test = ast.Call(
                 func=ast.Attribute(
                     value=ast.Name(id="F", ctx=ast.Load()), attr="lit", ctx=ast.Load()
@@ -380,6 +399,28 @@ def when_chain(arms: list[tuple[ast.expr, ast.expr]], default: ast.expr) -> ast.
         args=[default],
         keywords=[],
     )
+
+
+def _is_parameter(name: str) -> bool:
+    """Whether ``name`` is taken for a Column argument (``_parameters``)."""
+    parameters = _parameters.get()
+    return parameters is None or name in parameters
+
+
+def _reads_parameter(node: ast.expr) -> bool:
+    """Whether ``node`` reads a parameter; each shared subtree is walked
+    once."""
+    seen: set[int] = set()
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if id(n) in seen:
+            continue
+        seen.add(id(n))
+        if isinstance(n, ast.Name) and _is_parameter(n.id):
+            return True
+        stack.extend(ast.iter_child_nodes(n))
+    return False
 
 
 # ---------------------------------------------------------------------------
@@ -446,19 +487,25 @@ def _apply_if(node: Node, stmt: ast.If) -> Node:
     # nested (not flat) chain shape of the reference (main.py:275-289).
     test = substitute(stmt.test, node.env)
     return _join(
+        node.env,
         [(test, _fold(stmt.body, dict(node.env)))],
         _fold(stmt.orelse, dict(node.env)),
         stmt,
     )
 
 
-def _join(arms: list[tuple[ast.expr, Node]], default: Node, stmt: ast.stmt) -> Node:
+def _join(
+    before: dict[str, ast.expr],
+    arms: list[tuple[ast.expr, Node]],
+    default: Node,
+    stmt: ast.stmt,
+) -> Node:
     """The Switch of a conditional statement — or, when no branch returns
     and ``stmt`` is not held path-split, one Open in which each variable a
     branch rebinds is a when-chain over the branch values (nested for
     ``if/elif``, flat for ``match``, as the Switch would print). A variable
     a branch leaves unbound reads as the free name there, as it would on
-    that path."""
+    that path. ``before`` is the env the branches were folded from."""
     state = _fold_state.get()
     branches = [sub for _, sub in arms] + [default]
     if stmt in state.split or not all(isinstance(b, Open) for b in branches):
@@ -473,8 +520,9 @@ def _join(arms: list[tuple[ast.expr, Node]], default: Node, stmt: ast.stmt) -> N
             env[name] = found[0]
             continue
         values = [ast.Name(id=name, ctx=ast.Load()) if v is None else v for v in found]
-        chain = when_chain([(t, v) for (t, _), v in zip(arms, values)], values[-1])
-        chain._sparkify_merge = _Merge(stmt, values)
+        tests = [t for t, _ in arms]
+        chain = when_chain(list(zip(tests, values)), values[-1])
+        chain._sparkify_merge = _Merge(stmt, tests, values, before.get(name))
         env[name] = chain
     return Open(env)
 
@@ -625,7 +673,7 @@ def _apply_match(node: Node, stmt: ast.Match) -> Node:
                 _fold(case.body, dict(node.env)),
             )
         )
-    return _join(arms, _fold(default_body, dict(node.env)), stmt)
+    return _join(node.env, arms, _fold(default_body, dict(node.env)), stmt)
 
 
 # -- the block compiler -----------------------------------------------------
@@ -678,16 +726,21 @@ def _fold(stmts: list[ast.stmt], env: dict[str, ast.expr]) -> Node:
 
 def branch_tree_to_expr(node: Node) -> ast.expr:
     """Resolve a branch tree into one expression (reference
-    ``transform_tree_into_expr``, main.py:372-388)."""
+    ``transform_tree_into_expr``, main.py:372-388), with every merge that
+    can be factored emitted as ``base OP F.when(...)`` (module docstring)."""
+    return _factor_merges(_resolve(node))
+
+
+def _resolve(node: Node) -> ast.expr:
     if isinstance(node, Leaf):
         return node.expr
     if isinstance(node, Switch):
         if not node.arms:
             # O2 — every case was statically dead: collapse to the default.
-            return branch_tree_to_expr(node.default)
+            return _resolve(node.default)
         return when_chain(
-            [(test, branch_tree_to_expr(sub)) for test, sub in node.arms],
-            branch_tree_to_expr(node.default),
+            [(test, _resolve(sub)) for test, sub in node.arms],
+            _resolve(node.default),
         )
     raise TranspileError("Not all branches return")
 
@@ -773,7 +826,6 @@ class _Guard:
     """One pass of the exactness guard over a folded tree's DAG."""
 
     def __init__(self) -> None:
-        self.parameters = _parameters.get()
         self.unsound: set[ast.stmt] = set()
         self.reached: set[ast.stmt] = set()
         self._seen: dict[int, tuple[frozenset[str], frozenset]] = {}
@@ -810,8 +862,7 @@ class _Guard:
         if isinstance(node, ast.Constant):
             return frozenset({_constant_class(node.value)}), _NO_MERGES
         if isinstance(node, ast.Name):
-            column = self.parameters is None or node.id in self.parameters
-            return frozenset({_COL if column else _ANY}), _NO_MERGES
+            return frozenset({_COL if _is_parameter(node.id) else _ANY}), _NO_MERGES
         if _is_when_call(node):
             values = self._when_values(node)
             double = values <= {_DBL, _FLOAT}
@@ -889,6 +940,118 @@ def _unsound_merges(tree: Node, state: _FoldState) -> set[ast.stmt]:
 
     walk(tree)
     return guard.unsound | (state.merged - guard.reached)
+
+
+# ---------------------------------------------------------------------------
+# Emission: factor accumulator merges out of their when-chains (module
+# docstring), so that the pre-branch value is read once.
+# ---------------------------------------------------------------------------
+
+#: ``x + -0.0``, ``x - 0.0`` and ``x * 1.0`` return ``x`` bit for bit,
+#: for ``-0.0``, NaN, ±inf and null too
+_IDENTITY = {ast.Add: -0.0, ast.Sub: 0.0, ast.Mult: 1.0}
+
+
+def _same(a: object, b: object) -> bool:
+    """Whether two expressions print alike. ``_fresh`` copies every node but
+    merged ones, so two copies meet at shared nodes or differ."""
+    if a is b:
+        return True
+    if isinstance(a, list) and isinstance(b, list):
+        return len(a) == len(b) and all(map(_same, a, b))
+    if not isinstance(a, ast.AST):
+        return type(a) is type(b) and repr(a) == repr(b)  # 0.0 is not -0.0
+    if type(a) is not type(b) or _merge_of(a) or _merge_of(b):
+        return False
+    return all(_same(x, y) for (_, x), (_, y) in zip(ast.iter_fields(a), ast.iter_fields(b)))
+
+
+def _factor_merges(root: ast.expr) -> ast.expr:
+    """Rewrite ``root``'s DAG in place, children first, emitting each merge
+    that the module docstring's conditions allow as ``base OP F.when(c,
+    e)...otherwise(identity)``; return the rewritten root."""
+    guard = _Guard()
+    #: id -> (node, its emitted form); holding the node keeps its id unique
+    done: dict[int, tuple[ast.expr, ast.expr]] = {}
+    identities: set[int] = set()
+    folds: dict[tuple[int, bool], bool] = {}
+
+    def emit(node: ast.expr) -> ast.expr:
+        hit = done.get(id(node))
+        if hit is not None:
+            return hit[1]
+        for field, value in ast.iter_fields(node):
+            if isinstance(value, ast.expr):
+                setattr(node, field, emit(value))
+            elif isinstance(value, list):
+                setattr(node, field, [emit(v) if isinstance(v, ast.expr) else v for v in value])
+                for v in value:
+                    if isinstance(v, ast.keyword):
+                        v.value = emit(v.value)
+        merge = _merge_of(node)
+        out = (factored(merge) if merge is not None else None) or node
+        done[id(node)] = (node, out)
+        return out
+
+    def literal(node: ast.expr, zero: bool) -> bool:
+        """Whether Catalyst could fold ``node`` to a literal (``zero``: to
+        ``±0.0``), taking parameters for Columns that are not literals."""
+        key = (id(node), zero)
+        if key not in folds:
+            folds[key] = _literal(node, zero)
+        return folds[key]
+
+    def _literal(node: ast.expr, zero: bool) -> bool:
+        if id(node) in identities:  # it meets only values that cannot be zero
+            return not zero
+        if isinstance(node, ast.Constant):
+            return not zero or node.value == 0
+        if isinstance(node, ast.Name):
+            return not _is_parameter(node.id)
+        if _is_when_call(node):
+            # a folded test picks one value; equal values collapse to one
+            values = node.args[-1:] if node.func.attr == "when" else list(node.args)
+            if not isinstance(node.func.value, ast.Name):
+                values.append(node.func.value)
+            return any(literal(v, zero) for v in values)
+        if isinstance(node, ast.UnaryOp) and isinstance(node.op, (ast.UAdd, ast.USub)):
+            return literal(node.operand, zero)
+        if isinstance(node, ast.Call):
+            return True
+        return all(literal(c, False) for c in _expr_children(node))
+
+    def factored(merge: _Merge) -> ast.expr | None:
+        if merge.base is None:
+            return None
+        base = emit(merge.base)
+        op, terms = None, []
+        for value in map(emit, merge.values):
+            if _same(value, base):
+                terms.append(None)
+            elif (
+                isinstance(value, ast.BinOp)
+                and type(value.op) in _IDENTITY
+                and op in (None, type(value.op))
+                and _same(value.left, base)
+            ):
+                op = type(value.op)
+                terms.append(value.right)
+            else:
+                return None
+        present = [e for e in terms if e is not None]
+        if op is None or not all(
+            guard.info(e)[0] <= {_DBL, _FLOAT} for e in (base, *present)
+        ):
+            return None
+        if op is not ast.Mult and any(literal(e, True) for e in present):
+            return None
+        identity = ast.Constant(value=_IDENTITY[op])
+        identities.add(id(identity))
+        terms = [identity if e is None else e for e in terms]
+        tests = [emit(t) for t in merge.tests]
+        return ast.BinOp(left=base, op=op(), right=when_chain(list(zip(tests, terms)), terms[-1]))
+
+    return emit(root)
 
 
 def _hoist_shared(expr: ast.expr, taken: set[str]) -> list[ast.stmt]:

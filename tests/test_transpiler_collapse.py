@@ -11,11 +11,12 @@ from __future__ import annotations
 
 import importlib.util
 import linecache
+import math
 import random
 import struct
 from pathlib import Path
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -45,8 +46,11 @@ _THRESHOLD = st.floats(-50.0, 50.0).map(lambda t: round(t, 3))
 @st.composite
 def _update(draw) -> str:
     op = draw(st.sampled_from(["+", "-", "*"]))
-    w = draw(_WEIGHT)
-    return f"s = s {op} {round(1 + w / 10, 3) if op == '*' else w}"
+    # a zero weight must keep its when-chain; `* q` reads a Column
+    w = draw(st.one_of(_WEIGHT, st.sampled_from([0.0, -0.0])))
+    if op == "*":
+        return f"s = s * {draw(st.sampled_from([round(1 + w / 10, 3), 'q']))}"
+    return f"s = s {op} {w}"
 
 
 @st.composite
@@ -82,7 +86,8 @@ def _rule(draw) -> tuple[list[str], int]:
 @st.composite
 def rule_programs(draw) -> tuple[str, int]:
     rules = draw(st.lists(_rule(), min_size=1, max_size=8))
-    body = ["s = 0.0"] + [line for lines, _ in rules for line in lines] + ["return s"]
+    start = draw(st.sampled_from(["0.0", "-0.0", "1.5"]))
+    body = [f"s = {start}"] + [line for lines, _ in rules for line in lines] + ["return s"]
     src = "def rules(q, p, k):\n" + "".join(f"    {line}\n" for line in body)
     return src, sum(whens for _, whens in rules)
 
@@ -91,12 +96,22 @@ def _bits(v: float) -> bytes:
     return struct.pack("<d", v)
 
 
-@given(
-    program=rule_programs(),
-    q=st.floats(-60.0, 60.0),
-    p=st.floats(-60.0, 60.0),
-    k=st.integers(0, 5),
+_INPUT = st.one_of(
+    st.floats(-60.0, 60.0),
+    st.sampled_from([-0.0, math.nan, math.inf, -math.inf]),
 )
+
+
+_SIGNED_ZERO = (
+    "def rules(q, p, k):\n    s = -0.0\n    if q > 0.0:\n        s = s + 1.0\n"
+    "    if p > 0.0:\n        s = s - 2.0\n    if k > 0:\n        s = s * q\n    return s\n",
+    3,
+)
+
+
+@given(program=rule_programs(), q=_INPUT, p=_INPUT, k=st.integers(0, 5))
+@example(program=_SIGNED_ZERO, q=-1.0, p=-1.0, k=0)  # stays -0.0 through the identities
+@example(program=_SIGNED_ZERO, q=math.nan, p=math.inf, k=1)
 @settings(max_examples=150, deadline=None)
 def test_rule_programs_collapse_bit_equal(program, q, p, k):
     src, whens = program
@@ -147,12 +162,30 @@ def shared_twice(x):
     return s
 
 
+def reflected_twice(x):
+    s = 0.0
+    if x > 0:
+        s = x * 2.0
+    if x > 5:
+        s = 1.0 - s
+    return s
+
+
 def clashing_temporary(x, _sparkify_t0):
     s = 0.0
     if x > 0:
         s = x * 2.0 + _sparkify_t0
     if x > 5:
         s = s * 2.0
+    return s
+
+
+def clashing_temporary_reflected(x, _sparkify_t0):
+    s = 0.0
+    if x > 0:
+        s = x * 2.0 + _sparkify_t0
+    if x > 5:
+        s = 2.0 * s
     return s
 
 
@@ -178,16 +211,32 @@ def test_single_use_merge_prints_inline():
     )
 
 
-def test_shared_merge_is_bound_once():
+def test_accumulator_merge_reads_its_base_once():
+    """``s - 1.0`` on one branch and ``s`` on the other: ``s`` is factored
+    out, so nothing is shared and no temporary is bound."""
     out = transform_func_to_new_source(shared_twice)
     assert out.splitlines()[2:] == [
+        "    return F.when(x > 0, x * 2.0).otherwise(0.0)"
+        " - F.when(x > 5, 1.0).otherwise(0.0)",
+    ]
+    out = transform_func_to_new_source(clashing_temporary)
+    assert out.splitlines()[2:] == [
+        "    return F.when(x > 0, x * 2.0 + _sparkify_t0).otherwise(0.0)"
+        " * F.when(x > 5, 2.0).otherwise(1.0)",
+    ]
+
+
+def test_shared_merge_is_bound_once():
+    # `1.0 - s` does not have the form `s OP e`, so the merge keeps both reads
+    out = transform_func_to_new_source(reflected_twice)
+    assert out.splitlines()[2:] == [
         "    _sparkify_t0 = F.when(x > 0, x * 2.0).otherwise(0.0)",
-        "    return F.when(x > 5, _sparkify_t0 - 1.0).otherwise(_sparkify_t0)",
+        "    return F.when(x > 5, 1.0 - _sparkify_t0).otherwise(_sparkify_t0)",
     ]
 
 
 def test_temporaries_skip_names_the_function_uses():
-    out = transform_func_to_new_source(clashing_temporary)
+    out = transform_func_to_new_source(clashing_temporary_reflected)
     assert "    _sparkify_t1 = F.when(x > 0, x * 2.0 + _sparkify_t0).otherwise(0.0)" in out
 
 
@@ -397,12 +446,127 @@ def test_collapsed_column_equals_the_path_split(spark):
         ((F.col("id") % 11) / 100.0).alias("d"),
     )
     cols = {c: F.col(c) for c in ("q", "p", "d")}
-    merged = df.select(eight_rules(*cols.values()).alias("s"))
-    split = df.select(_path_split(cols).alias("s"))
-    assert merged.schema["s"].dataType == split.schema["s"].dataType
-    assert merged.exceptAll(split).count() == 0
-    assert split.exceptAll(merged).count() == 0
+    both = df.select(
+        eight_rules(*cols.values()).alias("merged"), _path_split(cols).alias("split")
+    )
+    assert both.schema["merged"].dataType == both.schema["split"].dataType
+    rows = both.collect()
+    assert [_bits(r.merged) for r in rows] == [_bits(r.split) for r in rows]
     # on the x > 0 path the split folds `s > 0` to `1.0 > 0`, a Python bool
     # that F.when takes only inside F.lit
     one = spark.range(1).select(sparkify(literal_test)(F.col("id") + 1.0).alias("v"))
     assert one.first().v == literal_test(1.0)
+
+
+LIMIT = 3
+
+
+def over_globals(x):
+    if LIMIT > 2:
+        return x
+    return 0
+
+
+def test_test_over_globals_is_a_literal(spark):
+    """A test that reads no parameter is a Python value even when it reads
+    a global, so it goes in ``F.lit`` too."""
+    out = transform_func_to_new_source(over_globals)
+    assert out.splitlines()[-1] == "    return F.when(F.lit(LIMIT > 2), x).otherwise(0)"
+    one = spark.range(1).select(sparkify(over_globals)(F.col("id") + 7).alias("v"))
+    assert one.first().v == over_globals(7)
+
+
+# --- factored accumulators: plan shape and bit patterns -------------------------
+
+
+def _case_whens(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count("CASE WHEN")
+
+
+def test_factored_plan_stays_linear(spark):
+    """Each rule reads the previous value once, so the optimized plan holds
+    one ``CASE WHEN`` per rule (the when-chain form unfolded to 255), and a
+    16-rule program fits whole-stage codegen's 64 KB method limit."""
+    df = spark.range(2000).select(
+        (F.col("id") % 50 + 1.0).alias("q"),
+        (F.col("id") * 37 % 99_000 + 1000.0).alias("p"),
+        (F.col("id") % 11 / 100.0).alias("d"),
+    )
+    cols = [F.col(c) for c in ("q", "p", "d")]
+    assert _case_whens(df.select(eight_rules(*cols).alias("s"))) == 8
+    rules = _perfbench_rules()
+    rules.RULES = 16
+    col = sparkify(_define(rules.program_source("r16", random.Random(1)), "r16"))(*cols)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        df.select(col.alias("s")).write.format("noop").mode("overwrite").save()
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+
+
+#: (argument, threshold, update) per rule; `s * q` and `s - q` read a Column
+#: of unknown type and keep their when-chains
+_SIGNED_RULES = [
+    ("q", 1.0, "s + 2.5"),
+    ("p", 1.0, "s - 0.75"),
+    ("q", 2.0, "s * 1.5"),
+    ("p", -1.0, "s * q"),
+    ("q", 0.5, "s + p * 2.0"),
+    ("p", 3.0, "s - q"),
+    ("q", -2.0, "s * 0.5"),
+]
+
+#: `+ 0.0` and `- -0.0` must not be factored: Catalyst would fold
+#: `CASE WHEN c THEN 0.0 ELSE -0.0` into one literal and lose the sign of a
+#: zero `s` (the start is a Column, so the when-chain form folds nothing)
+_ZERO_RULES = [("p", 1.0, "s + 0.0"), ("p", 2.0, "s - -0.0"), ("q", 2.0, "s - 0.5")]
+
+
+def _program(name: str, start: str, rules) -> str:
+    lines = [f"def {name}(q, p):", f"    s = {start}"]
+    for arg, threshold, update in rules:
+        lines += [f"    if {arg} > {threshold}:", f"        s = {update}"]
+    return "\n".join([*lines, "    return s", ""])
+
+
+def _when_chain_form(start: str, rules, cols: dict):
+    """The unfactored emission, built by hand: each rule is
+    ``F.when(c, s OP e).otherwise(s)``, with Python arithmetic while ``s``
+    and ``e`` are Python floats."""
+    s = eval(start, {}, cols)
+    for arg, threshold, update in rules:
+        s = F.when(cols[arg] > threshold, eval(update, {}, {"s": s, **cols})).otherwise(s)
+    return s
+
+
+def _bit_patterns(values):
+    return [None if v is None else _bits(v) for v in values]
+
+
+def test_factored_column_is_bit_identical(spark):
+    signed = sparkify(_define(_program("signed", "-0.0", _SIGNED_RULES), "signed"))
+    assert signed.__wrapped_source__.splitlines()[2:] == [
+        "    _sparkify_t0 = (-0.0 + F.when(q > 1.0, 2.5).otherwise(-0.0)"
+        " - F.when(p > 1.0, 0.75).otherwise(0.0)) * F.when(q > 2.0, 1.5).otherwise(1.0)",
+        "    _sparkify_t1 = F.when(p > -1.0, _sparkify_t0 * q).otherwise(_sparkify_t0)"
+        " + F.when(q > 0.5, p * 2.0).otherwise(-0.0)",
+        "    return F.when(p > 3.0, _sparkify_t1 - q).otherwise(_sparkify_t1)"
+        " * F.when(q > -2.0, 0.5).otherwise(1.0)",
+    ]
+    zeros = sparkify(_define(_program("zeros", "q * 1.0", _ZERO_RULES), "zeros"))
+    assert zeros.__wrapped_source__.splitlines()[2:] == [
+        "    _sparkify_t0 = F.when(p > 1.0, q * 1.0 + 0.0).otherwise(q * 1.0)",
+        "    return F.when(p > 2.0, _sparkify_t0 - -0.0).otherwise(_sparkify_t0)"
+        " - F.when(q > 2.0, 0.5).otherwise(0.0)",
+    ]
+    special = [-0.0, 0.0, 0.75, 1.5, 2.5, 5.0, -3.0, math.nan, math.inf, -math.inf, None]
+    df = spark.createDataFrame([(q, p) for q in special for p in special], "q double, p double")
+    cols = {"q": F.col("q"), "p": F.col("p")}
+    for fn, start, rules in ((signed, "-0.0", _SIGNED_RULES), (zeros, "q * 1.0", _ZERO_RULES)):
+        rows = df.select(
+            fn(cols["q"], cols["p"]).alias("got"),
+            _when_chain_form(start, rules, cols).alias("want"),
+        ).collect()
+        got = _bit_patterns(r.got for r in rows)
+        assert got == _bit_patterns(r.want for r in rows)
+        assert _bits(-0.0) in got  # the signed zero survived the identities
