@@ -306,10 +306,9 @@ def main() -> None:
     # time plan construction + execution together: streaming queries drain
     # their source during construction, so timing only the sink write would
     # under-report them.
-    # canonical sorted order: queries() reorders itself by correctness-file
-    # staleness, and several operators cache shared intermediates, so
-    # registry order would make per-query timings depend on which
-    # CORRECTNESS_r*.json files exist on disk — not comparable across rounds
+    # canonical sorted order: several operators cache shared intermediates,
+    # so the sweep order decides which query pays each shared memo fill;
+    # sorted keeps timings comparable with the r20 sweep
     # Release dead shared caches at the two group boundaries where reuse
     # ends (dedup memos feed the docs_* pipelines; the ANN memo's last
     # reader is the similarity group): the sweep holds 100 queries' cached

@@ -13,15 +13,6 @@ shrunken registry would run fewer queries, all green, and the correctness
 gate would look healthy while coverage quietly dropped).
 ``tests/test_registry.py`` pins the exact registry counts as a second line
 of defense.
-
-LEDGER GUARD: this hub is deliberately OUTSIDE the staleness ledger's
-dep closures (modeling it would stale every query on any change —
-``__spark_entry__._module_deps``), so runtime code that lives here
-(``release_shared_caches``) gets no dep-aware re-proof when edited; it
-is covered by its own tests only, and must never become part of a
-registered query's execution path. Pinned by ``tests/
-test_driver_contract.py::
-test_dep_model_exception_set_is_exactly_the_documented_hubs``.
 """
 
 from __future__ import annotations

@@ -7,13 +7,6 @@ pruning, shuffle count, broadcast choice, codegen fusion — programmatically
 checkable. The plan-shape tests in ``tests/test_plan_shapes.py`` pin them
 so a regression that silently adds a shuffle or drops pushdown fails CI,
 not the cluster.
-
-LEDGER GUARD: read-only tooling consumed by tests/tools, deliberately
-outside the staleness ledger's dep closures — code added here gets no
-dep-aware re-proof and must never join a registered query's execution
-path (see ``__spark_entry__._module_deps``; pinned by
-``tests/test_driver_contract.py::
-test_dep_model_exception_set_is_exactly_the_documented_hubs``).
 """
 
 from __future__ import annotations

@@ -80,11 +80,6 @@ def _drained(
             return run_to_memory_sink(stream_df, output_mode=output_mode)
 
     run.__name__ = f"drained_{builder.__name__}"
-    # attribute the wrapper to the module that implements the streaming
-    # logic (jobs.py), so the driver contract's change-aware verification
-    # rotation re-proves these queries when THAT file changes — the wrapper
-    # itself is one line of drain plumbing
-    run.__module__ = builder.__module__
     run.__doc__ = (
         f"availableNow drain of {builder.__name__} into a memory sink; "
         "returns the sink as a batch DataFrame."

@@ -30,81 +30,3 @@ def test_every_query_has_oracle_or_is_documented():
 def test_driver_gate_sf001(spark, name):
     compare_query(spark, SF_DIR, _QUERIES[name], _ORACLES[name])
 
-
-def test_rotation_orders_least_recently_proven_first():
-    """The driver re-proves ~50 queries per round in ``queries()`` order, so
-    the registry sort IS the staleness-drain schedule: never-proven first,
-    then stale-by-code-change (oldest evidence first), then ascending
-    last-green round. This pin guards the final sort wiring — losing it
-    would silently starve the oldest re-proofs (the r6 failure mode) while
-    every individual query stayed green."""
-    names = list(entry_mod.queries())
-    last_green = entry_mod._last_green_round()
-    changed = entry_mod._module_change_round()
-    fns = entry_mod.queries()
-
-    def band(name: str) -> float:
-        green = last_green.get(name, -1)
-        if green < 0:
-            return -1.0
-        path = entry_mod._query_module_file(fns[name])
-        if (
-            path is not None
-            and entry_mod._effective_change_round(path, changed)[0] > green
-        ):
-            return -0.5 + green / 1e3
-        return float(green)
-
-    bands = [band(n) for n in names]
-    assert bands == sorted(bands), (
-        "registry rotation must be least-recently-proven first; first "
-        "out-of-order entry: "
-        + next(
-            f"{names[i]} (band {bands[i]}) after band {bands[i - 1]}"
-            for i in range(1, len(bands))
-            if bands[i] < bands[i - 1]
-        )
-    )
-
-
-def test_dep_model_exception_set_is_exactly_the_documented_hubs():
-    """The staleness ledger's dep closures deliberately exclude the
-    registry-hub inits (modeling them would stale everything on any
-    change — ``_module_deps`` docstring). That exclusion is a blind
-    spot by design, so it must stay EXACTLY the documented list: a new
-    package init silently joining the set (or a documented hub growing
-    into query execution paths) would let runtime-relevant code dodge
-    dep-aware re-proof (VERDICT r13 #6; the r14 dep-model fix moved
-    ``polarify_spark/__init__.py`` OUT of this set by making bare
-    attr imports dep the init that defines them)."""
-    deps = entry_mod._module_deps()
-    in_some_closure = set().union(*deps.values()) if deps else set()
-    inits = {m for m in deps if m.endswith("__init__.py")}
-    excluded = inits - in_some_closure
-    documented = {
-        "polarify_spark/operators/__init__.py",
-        "polarify_spark/plans/__init__.py",
-    }
-    assert excluded == documented, (
-        f"dep-model exception set drifted: {sorted(excluded)} != "
-        f"{sorted(documented)} — either dep the new hub or document it "
-        f"(LEDGER GUARD note + this list)"
-    )
-    # each documented hub carries the guard note where its next editor
-    # will read it
-    from pathlib import Path
-
-    repo = Path(entry_mod.__file__).resolve().parent
-    for hub in documented:
-        assert "LEDGER GUARD" in (repo / hub).read_text(), hub
-
-
-def test_core_queries_closure_reaches_the_transpiler():
-    """The r14 blind-spot fix itself: ``queries.py``'s closure was EMPTY
-    (``from . import sparkify`` resolved to nothing), so a transpiler
-    change never staled core-query evidence. It must now reach the
-    package init AND the transpiler through it."""
-    deps = entry_mod._module_deps()
-    closure = deps["polarify_spark/queries.py"]
-    assert "polarify_spark/__init__.py" in closure
-    assert "polarify_spark/transpiler.py" in closure

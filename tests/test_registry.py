@@ -83,109 +83,24 @@ def test_callables_and_sql_shapes():
         assert sql is None or (isinstance(sql, str) and sql.strip()), name
 
 
-def test_rotation_demotes_changed_modules(monkeypatch):
-    """A query whose implementing module changed after its last green round
-    must sort with the no-evidence block (re-proven next gate), ahead of
-    queries whose evidence is merely old (VERDICT r5 ask #2).
 
-    VERDICT r9 #1: the old version only exercised the synthetic branch when
-    the on-disk ledger happened to be clean, and its fake
-    ``_module_change_round`` called ``entry.queries()`` from INSIDE the
-    patched lambda — ``queries() -> _registries() -> fake -> queries()`` —
-    so the moment staleness hit 0/0 the never-run path went live and died
-    with RecursionError. Now: the name->module map is materialized into a
-    plain dict BEFORE any monkeypatching, and the synthetic branch runs
-    unconditionally (the real-ledger branch additionally runs when the disk
-    state provides one), so both paths are exercised regardless of which
-    CORRECTNESS_r*.json files exist.
-    """
-    fns = entry.queries()
-    names = list(fns)
-    # Snapshot BEFORE patching: the fakes below must be closed-over plain
-    # data, never call back into entry.* (the r9 RecursionError).
-    module_file = {n: entry._query_module_file(fns[n]) or "" for n in names}
-    lg = entry._last_green_round()
-    ch = entry._module_change_round()
-    assert ch, "git-based change map unavailable"
+def test_registry_order_is_registration_order(monkeypatch):
+    """``queries()`` / ``oracle_sql()`` are the registries merged in
+    registration order (Q1-Q13, then each operator module in
+    ``operators/__init__.py`` order): no subprocess runs at import or on
+    the call, so the order cannot depend on git state or files on disk."""
+    import importlib
+    import subprocess
 
-    # Real-ledger branch: whenever the on-disk state has genuinely stale
-    # queries, the live ordering must demote every one of them past none
-    # of the fresh-evidence queries.
-    stale_changed = [
-        n for n in names
-        if lg.get(n, -1) >= 0
-        and entry._effective_change_round(module_file[n], ch)[0] > lg[n]
-    ]
-    if stale_changed:
-        ordered = list(entry.queries())
-        fresh = [n for n in names if lg.get(n, -1) >= 0 and n not in stale_changed]
-        worst_stale = max(ordered.index(n) for n in stale_changed)
-        best_fresh = min(ordered.index(n) for n in fresh)
-        assert worst_stale < best_fresh, (
-            f"changed-code query sorted after fresh-evidence query: "
-            f"{stale_changed} vs first fresh at {best_fresh}"
-        )
+    def no_subprocess(*args, **kwargs):
+        raise AssertionError(f"driver contract started a subprocess: {args}")
 
-    # Synthetic branch (always runs): everything green at round 1, then one
-    # module "changes" at round 99 — every query that module implements OR
-    # that transitively imports it (dep-aware, VERDICT r11 ask #3) must
-    # sort before every query from an untouched module. The fakes are plain
-    # dicts captured above; they cannot recurse.
-    target_file = module_file[names[0]]
-    deps = entry._module_deps()
-    fake_green = {n: 1 for n in names}
-    fake_changed = {target_file: 99}
-    monkeypatch.setattr(entry, "_last_green_round", lambda: dict(fake_green))
-    monkeypatch.setattr(entry, "_module_change_round", lambda: dict(fake_changed))
-    ordered = list(entry.queries())
-    demoted = {
-        n for n in names
-        if module_file[n] == target_file
-        or target_file in deps.get(module_file[n], ())
-    }
-    kept = set(names) - demoted
-    assert demoted and kept, "fixture needs at least two distinct modules"
-    worst_demoted = max(ordered.index(n) for n in demoted)
-    best_kept = min(ordered.index(n) for n in kept)
-    assert worst_demoted < best_kept, (
-        f"synthetic-stale module {target_file} not fully demoted: "
-        f"worst at {worst_demoted}, first fresh at {best_kept}"
-    )
-
-
-def test_ledger_dep_aware_cross_module_staleness():
-    """VERDICT r11 ask #3, the exact hole: `docs_strip_repeated_spans` /
-    `docs_decontaminate_spans` are defined in refine.py but execute
-    through dedup.py's memo artifacts — under an injected change map
-    where ONLY dedup.py changed after refine's green round, their
-    effective change round must exceed that green round (STALE), and
-    a query with no dedup dependency must stay CURRENT."""
-    refine = "polarify_spark/operators/refine.py"
-    deps = entry._module_deps()
-    assert "polarify_spark/operators/dedup.py" in deps[refine], (
-        "derived import graph lost the refine->dedup edge"
-    )
-    injected = {"polarify_spark/operators/dedup.py": 11}
-    rnd, via = entry._effective_change_round(refine, injected)
-    assert (rnd, via) == (11, "polarify_spark/operators/dedup.py")
-    green = 10  # refine's r10 evidence predates the dedup r11 change
-    assert rnd > green, "dedup-only edit must stale the refine queries"
-    # an independent module (relational.py imports only ..functions)
-    rel = "polarify_spark/operators/relational.py"
-    assert entry._effective_change_round(rel, injected)[0] == 0
-
-
-def test_module_deps_transitive_through_package_init():
-    """A package-name import deps the package __init__ and, through the
-    closure, the submodules it re-exports: dedup.py imports
-    `..functions` names, so a change to functions/hashing.py must reach
-    dedup's effective round."""
-    deps = entry._module_deps()
-    dd = deps["polarify_spark/operators/dedup.py"]
-    assert "polarify_spark/functions/__init__.py" in dd
-    assert "polarify_spark/functions/hashing.py" in dd
-    # and the registry hub __init__ must NOT make everything depend on
-    # everything: bpe.py never imports dedup
-    assert "polarify_spark/operators/dedup.py" not in deps[
-        "polarify_spark/operators/bpe.py"
-    ]
+    monkeypatch.setattr(subprocess, "run", no_subprocess)
+    monkeypatch.setattr(subprocess, "Popen", no_subprocess)
+    importlib.reload(entry)
+    q = entry.queries()
+    registered = {**CORE_QUERIES, **EXTENSION_QUERIES}
+    assert list(q) == list(registered)
+    for name, fn in q.items():
+        assert fn is registered[name][0], name
+    assert set(entry.oracle_sql()) == set(q)

@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """Local simulation of the driver correctness gate: run every registered
 query against its DuckDB oracle at sf0.01 and report per-query
-rows/schema/values agreement. Run before a round ends to predict
-CORRECTNESS_r{N}.json: PYTHONPATH=. python tools/driver_sim.py
+rows/schema/values agreement: PYTHONPATH=. python tools/driver_sim.py
 
 Options (VERDICT r11 asks #2/#4):
     --out=FILE      also write a PREGATE-style JSON artifact

@@ -154,9 +154,7 @@ def run_rep() -> dict:
         def static_build():
             # mirrors streaming_decontaminate's static eval-gram side
             # (polarify_spark/streaming/jobs.py, eval_hv) — keep in sync
-            # with the query; a shared helper would touch the package
-            # module and stale its dep closure mid-evidence-rotation.
-            # The real query builds this INSIDE _drained's
+            # with the query. The real query builds this INSIDE _drained's
             # scoped_shuffle_partitions(8), so time it under the same
             # conf or the full-minus-parts arithmetic skews.
             with scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
