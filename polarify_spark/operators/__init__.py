@@ -91,18 +91,19 @@ def release_shared_caches(spark, scope: str = "all") -> None:
     # Quiesce in-flight builds of the families whose values hold another
     # family's dicts (ADVICE r12): a simhash handle build that read a
     # dedup dict before the dedup clear but inserted its handle after the
-    # handle clear would leave a handle whose dict is detached — ``src``
-    # returns None and later durable artifacts (simhash_pairs, triangles,
-    # pagerank) get keyed off session-specific checkpoint plans. Builders
-    # hold their per-key lock for the WHOLE build, so holding every
-    # per-key lock excludes them. Only these outermost families are
-    # quiesced: their builds run inner families' builds, never the
-    # reverse, so no lock order inverts. The snapshot is taken before the
-    # acquisitions (a mid-build thread takes the family lock briefly for
-    # its insert), and acquisition follows insertion order, so two
-    # releases can't deadlock each other. Locks are acquired INSIDE the
-    # try and only acquired ones released (ADVICE r13); an interrupt in
-    # the one bytecode between acquire() and append still leaks that lock.
+    # handle clear would leave a handle pinning a detached dict, whose
+    # checkpoints then stay resident past the release that was meant to
+    # free them (the dict still names its corpus, so durable keys stay
+    # right either way). Builders hold their per-key lock for the WHOLE
+    # build, so holding every per-key lock excludes them. Only these
+    # outermost families are quiesced: their builds run inner families'
+    # builds, never the reverse, so no lock order inverts. The snapshot
+    # is taken before the acquisitions (a mid-build thread takes the
+    # family lock briefly for its insert), and acquisition follows
+    # insertion order, so two releases can't deadlock each other. Locks
+    # are acquired INSIDE the try and only acquired ones released (ADVICE
+    # r13); an interrupt in the one bytecode between acquire() and append
+    # still leaks that lock.
     # Residual: a first-touch build whose per-key lock did not exist at
     # snapshot time is not excluded (needs a key never seen by this
     # process with its build straddling the release).

@@ -34,6 +34,11 @@ if TYPE_CHECKING:
 
 _MISSING = object()
 
+#: the key under which a plan family's per-corpus dict holds its pure
+#: corpus frame (a tuple, like the per-key lock entries, so listings of a
+#: dict's artifact names skip it)
+_SRC = ("src",)
+
 #: one INFO record per executed memo build, carrying ``family``, ``key``
 #: (:func:`key_label`), ``event`` (``build``, or ``rebuild`` when an entry
 #: of a replaced session was evicted), ``mode`` (``durable`` when the build
@@ -98,9 +103,10 @@ class MemoFamily:
     ``by="plan"``: :attr:`memo` is a list of ``(pure corpus frame,
     {key: value})`` pairs. :meth:`corpus` finds a corpus's dict by session
     identity plus ``sameSemantics``; :meth:`build` and :meth:`artifact`
-    fill it; :meth:`src` maps the dict back to its pure frame, the
-    identity durable artifacts are keyed by (materialized artifacts embed
-    checkpoint RDD ids / read-back paths, which differ across sessions).
+    fill it; :meth:`src` reads the pure frame back from the dict (each
+    dict stores it), the identity durable artifacts are keyed by
+    (materialized artifacts embed checkpoint RDD ids / read-back paths,
+    which differ across sessions).
     The per-key build locks live inside each dict and drop with it: a
     release racing a build can at worst duplicate that one build (benign
     Spark work; durable publishes absorb concurrent same-key writers).
@@ -171,19 +177,18 @@ class MemoFamily:
             for s, memo in self.memo:
                 if s.sparkSession is src.sparkSession and src.sameSemantics(s):
                     return memo
-            memo: dict = {}
+            memo: dict = {_SRC: src}
             self.memo.append((src, memo))
             del self.memo[: -self.cap]
             return memo
 
     def src(self, memo: dict) -> "DataFrame | None":
-        """The pure frame that registered ``memo``, or ``None`` once the
-        dict is detached (released or trimmed)."""
-        with self.lock:
-            for s, m in self.memo:
-                if m is memo:
-                    return s
-        return None
+        """The pure frame that registered ``memo`` (``None`` for a dict
+        :meth:`corpus` did not make). The dict carries it, so a dict
+        detached by a release or trim still names its corpus: a build that
+        finishes on it keys its durable artifact where a later session
+        looks."""
+        return memo.get(_SRC)
 
     def build(self, memo: dict, key, build: "Callable"):
         """Build-once ``memo[key]`` under its per-key lock."""

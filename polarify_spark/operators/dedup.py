@@ -45,7 +45,6 @@ from ..functions import (
     whitespace_tokens,
     word_ngrams,
 )
-from ._memo import ARTIFACTS_DIR_CONF  # noqa: F401  (tests import it here)
 from ._memo import DEDUP, SIMHASH_HANDLE, SPAN_PLAN
 
 if TYPE_CHECKING:
@@ -1884,19 +1883,6 @@ SELECT doc_id, COUNT(*) AS n_triangles FROM nodes GROUP BY 1
 # --- embedding cosine near-dup ---------------------------------------------
 
 
-def _dot(a: "Column", b: "Column") -> "Column":
-    """Double-precision dot product of two float arrays, JVM-side:
-    aggregate over zip_with (accumulates left-to-right, matching the
-    index-ordered oracle)."""
-    from pyspark.sql import functions as F
-
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def dedup_embedding_neardup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """Embedding-cosine near-duplicates >= threshold, blocked on the
     *data-driven* IVF cell from ``operators.similarity._cell_assignment``
@@ -1909,7 +1895,7 @@ def dedup_embedding_neardup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     dims is engine-identical well past that precision."""
     from pyspark.sql import functions as F
 
-    from .similarity import _cell_assignment
+    from .similarity import _cell_assignment, _dot
 
     # precompute each vector's norm once — recomputing it per pair would
     # triple the inner-loop flops of the quadratic stage; repartition on the
@@ -1948,15 +1934,13 @@ def dedup_embedding_neardup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
 
 
 def _dedup_embedding_sql() -> str:
-    from .similarity import IVF_ASSIGN_CTES
+    from .similarity import IVF_ASSIGN_CTES, _cosine_sql
 
     return f"""
 WITH {IVF_ASSIGN_CTES},
 p AS (
   SELECT a.vec_id AS v1, b.vec_id AS v2, a.cell_id AS cell_id,
-         ROUND(list_dot_product(a.v, b.v)
-               / (sqrt(list_dot_product(a.v, a.v))
-                  * sqrt(list_dot_product(b.v, b.v))), 4) AS cosine
+         {_cosine_sql("a.v", "b.v")} AS cosine
   FROM assigned a JOIN assigned b ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
 )
 SELECT v1, v2, cell_id, cosine FROM p WHERE cosine >= {COSINE_THRESHOLD}

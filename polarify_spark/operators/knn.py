@@ -43,8 +43,13 @@ from .similarity import (
     N_QUERIES,
     _BUCKET_SQL,
     _bucket_expr,
-    _cosine,
+    _cosine_sql,
     _emb,
+    _ranked_by_centroid,
+    _scored,
+    _seed_centroids,
+    _top_k,
+    _topk_tail_sql,
 )
 
 if TYPE_CHECKING:
@@ -56,51 +61,6 @@ if TYPE_CHECKING:
 KNN_QUERY_LO = N_QUERIES + N_CELLS
 KNN_QUERY_HI = KNN_QUERY_LO + 16
 KNN_TOP_K = 5
-
-
-def _ranked_by_centroid(
-    side: "DataFrame", centroids: "DataFrame"
-) -> "DataFrame":
-    """(id, vec, cell_id, cell_cos, rn): every input row scored against
-    every centroid and ranked per row by (rounded cosine desc, cell_id
-    asc), mirroring the oracle's assignment CTE exactly — with ZERO side
-    shuffle: the centroids collapse to a 1-row broadcast array, each row
-    scores and sorts its own (cos, cell) list map-side, and posexplode
-    emits the ranking. This is ``similarity._cell_ranked``'s measured
-    shape (r18 audit): the previous broadcast-join + row_number window
-    planned an Exchange on ``id`` over |side| x |centroids| rows just to
-    rank a bounded-size list — a side-sized shuffle in every IVF index
-    build and serve, pure overhead at any scale. Sort key
-    (cell_cos desc, -cell_id desc) == the old window's
-    (cell_cos desc, cell_id asc), on the same round-4 values."""
-    from pyspark.sql import functions as F
-
-    cents = centroids.select(
-        F.struct(F.col("cell_id"), F.col("cent_vec")).alias("c")
-    ).agg(F.collect_list("c").alias("cents"))
-    ranked = F.sort_array(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(_cosine(F.col("vec"), c["cent_vec"]), 4).alias(
-                    "cell_cos"
-                ),
-                (-c["cell_id"]).alias("neg_cell_id"),
-            ),
-        ),
-        asc=False,
-    )
-    return (
-        side.crossJoin(F.broadcast(cents))
-        .select("id", "vec", F.posexplode(ranked).alias("pos", "s"))
-        .select(
-            "id",
-            "vec",
-            (-F.col("s.neg_cell_id")).alias("cell_id"),
-            F.col("s.cell_cos").alias("cell_cos"),
-            (F.col("pos") + 1).cast("int").alias("rn"),
-        )
-    )
 
 
 def knn_join(
@@ -140,7 +100,6 @@ def knn_join(
     exclude self by construction.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     q = queries.select(
         F.col(query_id).alias("id"), F.col(query_vec).alias("vec")
@@ -157,7 +116,7 @@ def knn_join(
         # the query block is the broadcast-sized side by contract here —
         # a corpus-sized query table should use an index method, whose
         # equi-join shuffles co-partitioned instead
-        scored = cs.join(F.broadcast(qs))
+        joined = cs.join(F.broadcast(qs))
     elif method == "ivf":
         if centroids is None:
             raise ValueError(
@@ -184,7 +143,7 @@ def knn_join(
         )
         # equi-join on the cell: a corpus vector lives in exactly one cell
         # and a query's probe cells are distinct, so no candidate dedup
-        scored = cs.join(qs, "cell_id")
+        joined = cs.join(qs, "cell_id")
     elif method == "rplsh":
         qs = q.select(
             F.col("id").alias("q_id"),
@@ -196,23 +155,13 @@ def knn_join(
             F.col("vec").alias("c_vec"),
             _bucket_expr(F.col("vec")).alias("bucket"),
         )
-        scored = cs.join(qs, "bucket")
+        joined = cs.join(qs, "bucket")
     else:
         raise ValueError(
             f"unknown method {method!r}; expected 'bruteforce', 'ivf' or 'rplsh'"
         )
 
-    scored = scored.select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
-    )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= k
-    )
+    return _top_k(_scored(joined), k)
 
 
 # --- persisted index store ---------------------------------------------------
@@ -298,7 +247,6 @@ def search_ivf_index(
     probed cells' directories are the only ones read. Returns the same
     (q_id, neighbor_id, cosine, rank) contract as :func:`knn_join`."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     handles = _index_marker_fs(spark, path)
     if handles is not None:
@@ -324,17 +272,7 @@ def search_ivf_index(
     cs = assigned.select(
         F.col("id").alias("neighbor_id"), F.col("vec").alias("c_vec"), "cell_id"
     )
-    scored = cs.join(F.broadcast(qs), "cell_id").select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
-    )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= k
-    )
+    return _top_k(_scored(cs.join(F.broadcast(qs), "cell_id")), k)
 
 
 # --- registered demo queries (oracle-checked) -------------------------------
@@ -471,20 +409,6 @@ def _cleanup_index_dirs() -> None:
             lock.release()
 
 
-def _seed_centroids(emb: "DataFrame") -> "DataFrame":
-    """The module's deterministic seed centroids (shared with the in-memory
-    IVF demo query): embeddings vec_id in [N_QUERIES, N_QUERIES+N_CELLS)."""
-    from pyspark.sql import functions as F
-
-    return emb.where(
-        (F.col("vec_id") >= N_QUERIES)
-        & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(
-        (F.col("vec_id") - N_QUERIES).alias("cell_id"),
-        F.col("embedding").alias("cent_vec"),
-    )
-
-
 def _served_index_path(spark: "SparkSession", sf_dir: str) -> str:
     import tempfile
 
@@ -563,21 +487,11 @@ WITH e AS (
 ),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM e q JOIN e c ON NOT ({_KNN_SPLIT.replace("vec_id", "c.vec_id")})
   WHERE {_KNN_SPLIT.replace("vec_id", "q.vec_id")}
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {KNN_TOP_K}
-"""
+{_topk_tail_sql(KNN_TOP_K)}"""
 
 KNN_JOIN_IVF_SQL = f"""
 WITH {IVF_ASSIGN_CTES},
@@ -587,23 +501,13 @@ probes AS (
 ),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM probes q
   JOIN assigned c
     ON c.cell_id = q.cell_id
    AND NOT ({_KNN_SPLIT.replace("vec_id", "c.vec_id")})
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {KNN_TOP_K}
-"""
+{_topk_tail_sql(KNN_TOP_K)}"""
 
 
 KNN_JOIN_RPLSH_SQL = f"""
@@ -615,24 +519,14 @@ bucketed AS (
 ),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM bucketed q
   JOIN bucketed c
     ON c.bucket = q.bucket
    AND NOT ({_KNN_SPLIT.replace("vec_id", "c.vec_id")})
   WHERE {_KNN_SPLIT.replace("vec_id", "q.vec_id")}
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {KNN_TOP_K}
-"""
+{_topk_tail_sql(KNN_TOP_K)}"""
 
 
 QUERIES: dict[str, tuple[Callable, str]] = {

@@ -35,7 +35,13 @@ Scale design (100 TB / billions of vectors, 1000 executors):
 
 All top-k paths emit (q_id, neighbor_id, cosine, rank) with cosine rounded
 to 4 decimals and rank ties broken by neighbor id, so results are
-deterministic and oracle-checkable against DuckDB.
+deterministic and oracle-checkable against DuckDB. That contract has one
+home, shared with ``operators.knn`` and ``operators.dedup``: ``_scored``
+(the round-4 cosine of a query-candidate join), ``_top_k`` (the per-q_id
+rank window cut at k), ``_ranked_by_centroid`` (a vector column ranked
+against a broadcast centroid array), ``_dot``/``_cosine``, and the oracle
+fragments ``_cosine_sql`` and ``_topk_tail_sql``. Each operator keeps only
+its own join.
 """
 
 from __future__ import annotations
@@ -78,6 +84,134 @@ def _cosine(a: "Column", b: "Column") -> "Column":
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
+def _scored(
+    joined: "DataFrame", c_vec: str = "c_vec", score: str = "cosine"
+) -> "DataFrame":
+    """(q_id, neighbor_id, score): the round-4 cosine of every
+    (``q_vec``, ``c_vec``) pair of a query-candidate join — the scoring
+    half of the top-k contract."""
+    from pyspark.sql import functions as F
+
+    return joined.select(
+        "q_id",
+        "neighbor_id",
+        F.round(_cosine(F.col("q_vec"), F.col(c_vec)), 4).alias(score),
+    )
+
+
+def _top_k(
+    scored: "DataFrame", k: int, score: str = "cosine", rank: str = "rank"
+) -> "DataFrame":
+    """The ranking half of the top-k contract: ``row_number`` per q_id
+    over (score desc, neighbor_id asc), kept while ``rank <= k``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    window = Window.partitionBy("q_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn(rank, F.row_number().over(window)).where(
+        F.col(rank) <= k
+    )
+
+
+def _seed_centroids(emb: "DataFrame") -> "DataFrame":
+    """(cell_id, cent_vec): the fixed seed centroids, embeddings vec_id in
+    [N_QUERIES, N_QUERIES + N_CELLS)."""
+    from pyspark.sql import functions as F
+
+    return emb.where(
+        (F.col("vec_id") >= N_QUERIES)
+        & (F.col("vec_id") < N_QUERIES + N_CELLS)
+    ).select(
+        (F.col("vec_id") - N_QUERIES).alias("cell_id"),
+        F.col("embedding").alias("cent_vec"),
+    )
+
+
+def _cents_row(centroids: "DataFrame") -> "DataFrame":
+    """A (cell_id, cent_vec) table collapsed to the 1-row ``cents`` array
+    that rides along as a broadcast."""
+    from pyspark.sql import functions as F
+
+    return centroids.select(
+        F.struct(F.col("cell_id"), F.col("cent_vec")).alias("c")
+    ).agg(F.collect_list("c").alias("cents"))
+
+
+def _by_centroid(vec: "Column", cos: str = "cell_cos") -> "Column":
+    """``vec`` scored against every centroid of the ``cents`` column,
+    best first: sort key (round-4 cosine desc, -cell_id desc) == (cosine
+    desc, cell_id asc), the oracle's assignment order."""
+    from pyspark.sql import functions as F
+
+    return F.sort_array(
+        F.transform(
+            F.col("cents"),
+            lambda c: F.struct(
+                F.round(_cosine(vec, c["cent_vec"]), 4).alias(cos),
+                (-c["cell_id"]).alias("neg_cell_id"),
+            ),
+        ),
+        asc=False,
+    )
+
+
+def _ranked_by_centroid(
+    side: "DataFrame",
+    centroids: "DataFrame",
+    id_col: str = "id",
+    vec: str = "vec",
+) -> "DataFrame":
+    """(id_col, vec, cell_id, cell_cos, rn): every row of ``side`` ranked
+    against every centroid of ``centroids`` (cell_id, cent_vec), with ZERO
+    side shuffle: the centroids ride along as a 1-row broadcast array,
+    each row scores and sorts its own bounded (cos, cell) list map-side,
+    and posexplode emits the ranking. (A broadcast join + row_number
+    window planned an Exchange over |side| x |centroids| rows just to rank
+    a bounded list.) rn=1 is the home cell, rn<=P the probe set."""
+    from pyspark.sql import functions as F
+
+    return (
+        side.crossJoin(F.broadcast(_cents_row(centroids)))
+        .select(
+            id_col, vec, F.posexplode(_by_centroid(F.col(vec))).alias("pos", "s")
+        )
+        .select(
+            id_col,
+            vec,
+            (-F.col("s.neg_cell_id")).alias("cell_id"),
+            F.col("s.cell_cos").alias("cell_cos"),
+            (F.col("pos") + 1).cast("int").alias("rn"),
+        )
+    )
+
+
+def _cosine_sql(a: str, b: str, col: int = 9) -> str:
+    """The oracle's round-4 cosine of list columns ``a`` and ``b``, its
+    continuation lines aligned for an expression starting at ``col``."""
+    pad = " " * col
+    return (
+        f"ROUND(list_dot_product({a}, {b})\n"
+        f"{pad}      / (sqrt(list_dot_product({a}, {a}))\n"
+        f"{pad}         * sqrt(list_dot_product({b}, {b}))), 4)"
+    )
+
+
+def _topk_tail_sql(k: int, src: str = "scored") -> str:
+    """The oracle's top-k tail: a ``ranked`` CTE over ``src`` (q_id,
+    neighbor_id, cosine) plus the final ``rank <= k`` select."""
+    return f"""ranked AS (
+  SELECT q_id, neighbor_id, cosine,
+         ROW_NUMBER() OVER (PARTITION BY q_id
+                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
+  FROM {src}
+)
+SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
+FROM ranked WHERE rank <= {k}
+"""
+
+
 def topk_bruteforce(
     spark: "SparkSession", sf_dir: str, emb: "DataFrame | None" = None
 ) -> "DataFrame":
@@ -88,7 +222,6 @@ def topk_bruteforce(
     table) — used by the clustered-recall harness; default is the parquet
     table."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     emb = _emb(spark, sf_dir) if emb is None else emb
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
@@ -97,21 +230,10 @@ def topk_bruteforce(
     corpus = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
-        )
+    joined = corpus.join(
+        F.broadcast(queries), F.col("neighbor_id") != F.col("q_id")
     )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rank_window))
-        .where(F.col("rank") <= TOP_K)
-    )
+    return _top_k(_scored(joined), TOP_K)
 
 
 TOPK_BRUTEFORCE_SQL = f"""
@@ -120,21 +242,11 @@ WITH e AS (
 ),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM e q JOIN e c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_topk_tail_sql(TOP_K)}"""
 
 
 def _cell_ranked(
@@ -145,56 +257,9 @@ def _cell_ranked(
     centroids; ties break on lower cell id). One shuffle-free corpus scan:
     the centroid list rides along as a 1-row broadcast. rn=1 is the IVF
     home cell; rn<=P is the probe set for multi-probe queries."""
-    from pyspark.sql import functions as F
-
     emb = _emb(spark, sf_dir) if emb is None else emb
-    centroids = (
-        emb.where(
-            (F.col("vec_id") >= N_QUERIES)
-            & (F.col("vec_id") < N_QUERIES + N_CELLS)
-        )
-        .select(
-            F.struct(
-                (F.col("vec_id") - N_QUERIES).alias("cell_id"),
-                F.col("embedding").alias("cent_vec"),
-            ).alias("c")
-        )
-        .agg(F.collect_list("c").alias("cents"))
-    )
-    # Per-row ranking, ZERO corpus shuffle: the N_CELLS centroids ride
-    # along as a 1-row broadcast array, each vector scores and sorts its
-    # own (cos, cell) list map-side, posexplode emits the ranking. The
-    # previous shape (broadcast join + row_number window) shuffled the
-    # whole corpus on vec_id just to rank a bounded-size list — the one
-    # corpus-sized exchange in the IVF build, and pure overhead at any
-    # scale. Sort key (cell_cos desc, -cell_id desc) == the old window's
-    # (cell_cos desc, cell_id asc), on the same round-4 values.
-    ranked = F.sort_array(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(
-                    _cosine(F.col("embedding"), c["cent_vec"]), 4
-                ).alias("cell_cos"),
-                (-c["cell_id"]).alias("neg_cell_id"),
-            ),
-        ),
-        asc=False,
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "embedding",
-            F.posexplode(ranked).alias("pos", "s"),
-        )
-        .select(
-            "vec_id",
-            "embedding",
-            (-F.col("s.neg_cell_id")).alias("cell_id"),
-            F.col("s.cell_cos").alias("cell_cos"),
-            (F.col("pos") + 1).cast("int").alias("rn"),
-        )
+    scored = _ranked_by_centroid(
+        emb, _seed_centroids(emb), id_col="vec_id", vec="embedding"
     )
     # memoized + checkpointed: probe-1, probe-2, the recall harnesses, and
     # the cell-blocked near-dup all derive from this ranking — build it
@@ -228,7 +293,6 @@ def topk_ivf(
 ) -> "DataFrame":
     """IVF probe-1 ANN: rank only within the query's own centroid cell."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     assigned = _cell_assignment(spark, sf_dir, emb)
     queries = assigned.where(F.col("vec_id") < N_QUERIES).select(
@@ -241,25 +305,12 @@ def topk_ivf(
         F.col("embedding").alias("c_vec"),
         F.col("cell_id").alias("c_cell"),
     )
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            (F.col("c_cell") == F.col("q_cell"))
-            & (F.col("neighbor_id") != F.col("q_id")),
-        )
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
-        )
+    joined = corpus.join(
+        F.broadcast(queries),
+        (F.col("c_cell") == F.col("q_cell"))
+        & (F.col("neighbor_id") != F.col("q_id")),
     )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rank_window))
-        .where(F.col("rank") <= TOP_K)
-    )
+    return _top_k(_scored(joined), TOP_K)
 
 
 #: shared "assign every vector to its max-cosine centroid cell" CTE chain —
@@ -274,13 +325,9 @@ cent AS (
 ),
 assign_scored AS (
   SELECT e.vec_id, e.v, cent.cell_id,
-         ROUND(list_dot_product(e.v, cent.cent_v)
-               / (sqrt(list_dot_product(e.v, e.v))
-                  * sqrt(list_dot_product(cent.cent_v, cent.cent_v))), 4) AS cc,
+         {_cosine_sql("e.v", "cent.cent_v")} AS cc,
          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                            ORDER BY ROUND(list_dot_product(e.v, cent.cent_v)
-                                           / (sqrt(list_dot_product(e.v, e.v))
-                                              * sqrt(list_dot_product(cent.cent_v, cent.cent_v))), 4) DESC,
+                            ORDER BY {_cosine_sql("e.v", "cent.cent_v", 37)} DESC,
                                      cent.cell_id ASC) AS rn
   FROM e CROSS JOIN cent
 ),
@@ -292,22 +339,12 @@ TOPK_IVF_SQL = f"""
 WITH {IVF_ASSIGN_CTES},
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM assigned q
   JOIN assigned c ON c.cell_id = q.cell_id AND c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_topk_tail_sql(TOP_K)}"""
 
 
 N_PROBES = 2
@@ -322,7 +359,6 @@ def topk_ivf_multiprobe(
     still touches only P/n_cells of the corpus, and the probe set rides the
     same broadcast as the queries."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     ranked = _cell_ranked(spark, sf_dir, emb)
     queries = (
@@ -344,21 +380,12 @@ def topk_ivf_multiprobe(
     # no candidate dedup needed: each corpus vector lives in exactly one
     # cell and a query's probe cells are distinct, so a (q, neighbor) pair
     # appears at most once
-    scored = corpus.join(
+    joined = corpus.join(
         F.broadcast(queries),
         (F.col("c_cell") == F.col("q_cell"))
         & (F.col("neighbor_id") != F.col("q_id")),
-    ).select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
     )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(_scored(joined), TOP_K)
 
 
 TOPK_IVF_MULTIPROBE_SQL = f"""
@@ -369,21 +396,11 @@ probes AS (
 ),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM probes q
   JOIN assigned c ON c.cell_id = q.cell_id AND c.vec_id != q.vec_id
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_topk_tail_sql(TOP_K)}"""
 
 
 # --- random-projection LSH --------------------------------------------------
@@ -451,7 +468,6 @@ def topk_rplsh(
     ~1/2^planes of the corpus — but needs no centroid training and extends
     to multi-probe (flip low-margin bits) for recall."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     emb = _bucketed(spark, sf_dir, emb)
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
@@ -464,21 +480,12 @@ def topk_rplsh(
         F.col("embedding").alias("c_vec"),
         F.col("bucket").alias("c_bucket"),
     )
-    scored = corpus.join(
+    joined = corpus.join(
         F.broadcast(queries),
         (F.col("c_bucket") == F.col("q_bucket"))
         & (F.col("neighbor_id") != F.col("q_id")),
-    ).select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
     )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(_scored(joined), TOP_K)
 
 
 def topk_rplsh_multiprobe(
@@ -492,7 +499,6 @@ def topk_rplsh_multiprobe(
     probe-1 at unchanged memory — the standard LSH recall lever without
     adding tables or planes."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     emb = _bucketed(spark, sf_dir, emb)
     corpus = emb.select(
@@ -526,21 +532,12 @@ def topk_rplsh_multiprobe(
         F.col("embedding").alias("q_vec"),
         F.explode(F.array(F.col("bucket"), probe2)).alias("q_bucket"),
     )
-    scored = corpus.join(
+    joined = corpus.join(
         F.broadcast(queries),
         (F.col("c_bucket") == F.col("q_bucket"))
         & (F.col("neighbor_id") != F.col("q_id")),
-    ).select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
     )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(_scored(joined), TOP_K)
 
 
 def _plane_sql(j: int) -> str:
@@ -561,22 +558,12 @@ bucketed AS (
 ),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM bucketed q
   JOIN bucketed c ON c.bucket = q.bucket AND c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_topk_tail_sql(TOP_K)}"""
 
 
 _MARGIN_SQL = ", ".join(
@@ -610,21 +597,11 @@ probes AS (
 ),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM probes q
   JOIN bucketed c ON c.bucket = q.q_bucket AND c.vec_id != q.vec_id
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_topk_tail_sql(TOP_K)}"""
 
 
 # --- AND-OR amplified RP-LSH (multiple hash tables) --------------------------
@@ -715,7 +692,6 @@ def topk_rplsh_multitable(
     At billions of vectors the (t, bucket) pair is the partitioning key,
     exactly like the IVF cell id."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     b = _multitable_bucketed(spark, sf_dir, emb)
     queries = b.where(F.col("vec_id") < N_QUERIES).select(
@@ -730,25 +706,16 @@ def topk_rplsh_multitable(
         "t",
         "bucket",
     )
-    scored = corpus.join(
+    joined = corpus.join(
         F.broadcast(queries),
         (F.col("t") == F.col("q_t"))
         & (F.col("bucket") == F.col("q_bucket"))
         & (F.col("neighbor_id") != F.col("q_id")),
-    ).select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
     )
-    dedup = scored.groupBy("q_id", "neighbor_id").agg(
+    dedup = _scored(joined).groupBy("q_id", "neighbor_id").agg(
         F.max("cosine").alias("cosine")
     )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return dedup.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(dedup, TOP_K)
 
 
 def _table_plane_sql(j: int) -> str:
@@ -783,22 +750,12 @@ cand AS (
 ),
 scored AS (
   SELECT cand.q_id, cand.neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM cand
   JOIN e q ON q.vec_id = cand.q_id
   JOIN e c ON c.vec_id = cand.neighbor_id
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_topk_tail_sql(TOP_K)}"""
 
 
 # --- int8 scalar quantization (SQ8) -----------------------------------------
@@ -872,7 +829,6 @@ def topk_sq8(
     ``topk_bruteforce`` — queries broadcast, corpus never shuffled — at a
     quarter of the corpus memory."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     emb = _emb(spark, sf_dir) if emb is None else emb
     # one row; memoized + checkpointed so the min/max corpus pass runs once
@@ -886,19 +842,10 @@ def topk_sq8(
     corpus = codes.crossJoin(F.broadcast(stats)).select(
         F.col("vec_id").alias("neighbor_id"), _dequant(F.col("codes")).alias("c_vec")
     )
-    scored = corpus.join(
+    joined = corpus.join(
         F.broadcast(queries), F.col("neighbor_id") != F.col("q_id")
-    ).select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
     )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(_scored(joined), TOP_K)
 
 
 _SQ8_CTES = f"""stats AS (
@@ -928,21 +875,11 @@ WITH e AS (
 {_SQ8_CTES},
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.cv)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.cv, c.cv))), 4) AS cosine
+         {_cosine_sql("q.v", "c.cv")} AS cosine
   FROM e q JOIN dq c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_topk_tail_sql(TOP_K)}"""
 
 
 # --- product quantization (PQ) ----------------------------------------------
@@ -1242,7 +1179,6 @@ def topk_pq(
     shape as ``topk_bruteforce``/``topk_sq8``; recall cost of the heavier
     compression is measured by the recall harness."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     emb = _emb(spark, sf_dir) if emb is None else emb
     corpus = _pq_dequantized(emb).select(
@@ -1251,19 +1187,10 @@ def topk_pq(
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    scored = corpus.join(
+    joined = corpus.join(
         F.broadcast(queries), F.col("neighbor_id") != F.col("q_id")
-    ).select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cosine"),
     )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(_scored(joined), TOP_K)
 
 
 def cluster_quality(spark: "SparkSession", sf_dir: str) -> "DataFrame":
@@ -1341,7 +1268,6 @@ def topk_pq_rerank(
     in the tests) while the full-precision scan cost stays shortlist-
     bounded."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     emb = _emb(spark, sf_dir) if emb is None else emb
     corpus = _pq_dequantized(emb).select(
@@ -1350,37 +1276,19 @@ def topk_pq_rerank(
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    approx = corpus.join(
-        F.broadcast(queries), F.col("neighbor_id") != F.col("q_id")
-    ).select(
-        "q_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("pq_cosine"),
+    approx = _scored(
+        corpus.join(F.broadcast(queries), F.col("neighbor_id") != F.col("q_id")),
+        score="pq_cosine",
     )
-    short_w = Window.partitionBy("q_id").orderBy(
-        F.col("pq_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("srank", F.row_number().over(short_w))
-        .where(F.col("srank") <= RERANK_SHORTLIST)
-        .select("q_id", "neighbor_id")
-    )
+    shortlist = _top_k(
+        approx, RERANK_SHORTLIST, score="pq_cosine", rank="srank"
+    ).select("q_id", "neighbor_id")
     exact = (
         emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("t_vec"))
         .join(F.broadcast(shortlist), "neighbor_id")
         .join(F.broadcast(queries), "q_id")
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(_cosine(F.col("q_vec"), F.col("t_vec")), 4).alias("cosine"),
-        )
     )
-    rank_window = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rank", F.row_number().over(rank_window)).where(
-        F.col("rank") <= TOP_K
-    )
+    return _top_k(_scored(exact, c_vec="t_vec"), TOP_K)
 
 
 def _pq_code_sql(s: str, c: str) -> str:
@@ -1470,21 +1378,11 @@ WITH e AS (
 {_PQ_CTES},
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.cv)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.cv, c.cv))), 4) AS cosine
+         {_cosine_sql("q.v", "c.cv")} AS cosine
   FROM e q JOIN dq c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_topk_tail_sql(TOP_K)}"""
 
 TOPK_PQ_RERANK_SQL = f"""
 WITH e AS (
@@ -1493,9 +1391,7 @@ WITH e AS (
 {_PQ_CTES},
 approx AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.v, c.cv)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.cv, c.cv))), 4) AS pq_cosine
+         {_cosine_sql("q.v", "c.cv")} AS pq_cosine
   FROM e q JOIN dq c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
@@ -1509,22 +1405,12 @@ short AS (
 ),
 exact AS (
   SELECT s.q_id, s.neighbor_id,
-         ROUND(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 4) AS cosine
+         {_cosine_sql("q.v", "c.v")} AS cosine
   FROM short s
   JOIN e q ON q.vec_id = s.q_id
   JOIN e c ON c.vec_id = s.neighbor_id
 ),
-ranked AS (
-  SELECT q_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM exact
-)
-SELECT q_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+{_topk_tail_sql(TOP_K, "exact")}"""
 
 
 # --- measured ANN recall ----------------------------------------------------
@@ -1771,33 +1657,14 @@ KMEANS_ITERS = 2
 
 def _assign_to_centroids(emb: "DataFrame", cents: "DataFrame") -> "DataFrame":
     """(vec_id, embedding, cell_id): each vector's max-cosine centroid from
-    an explicit centroid table (cell_id, cent_vec), computed entirely
-    map-side (r18 audit — the ``_cell_ranked`` shape): the centroid table
-    collapses to a 1-row broadcast array and each vector reduces its own
-    bounded (cos, cell) list with ``sort_array(...)[0]`` — ZERO corpus
-    shuffle, where the previous broadcast-join + row_number window
-    planned an Exchange on vec_id in EVERY k-means iteration. Ties break
-    on lower cell_id after 4-decimal rounding, matching the SQL oracle
-    exactly (sort key (cc desc, -cell_id desc) == (cc desc, cell_id
-    asc))."""
+    an explicit centroid table (cell_id, cent_vec) — ``_by_centroid``'s
+    map-side ranking cut to its head with ``[0]``, so no k-means iteration
+    shuffles the corpus. Ties break on lower cell_id after 4-decimal
+    rounding, matching the SQL oracle exactly."""
     from pyspark.sql import functions as F
 
-    cents_row = cents.select(
-        F.struct(F.col("cell_id"), F.col("cent_vec")).alias("c")
-    ).agg(F.collect_list("c").alias("cents"))
-    best = F.sort_array(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(_cosine(F.col("embedding"), c["cent_vec"]), 4).alias(
-                    "cc"
-                ),
-                (-c["cell_id"]).alias("neg_cell_id"),
-            ),
-        ),
-        asc=False,
-    )[0]
-    return emb.crossJoin(F.broadcast(cents_row)).select(
+    best = _by_centroid(F.col("embedding"), cos="cc")[0]
+    return emb.crossJoin(F.broadcast(_cents_row(cents))).select(
         "vec_id", "embedding", (-best["neg_cell_id"]).alias("cell_id")
     )
 
@@ -1827,12 +1694,7 @@ def kmeans_centroids(
     emb = (_emb(spark, sf_dir) if emb is None else emb).select(
         "vec_id", "embedding"
     )
-    cents = emb.where(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(
-        (F.col("vec_id") - N_QUERIES).alias("cell_id"),
-        F.col("embedding").alias("cent_vec"),
-    )
+    cents = _seed_centroids(emb)
     mu = None
     for _ in range(n_iter):
         assigned = _assign_to_centroids(emb, cents)
@@ -1873,9 +1735,7 @@ cent0 AS (
             f"""a{it} AS (
   SELECT e.vec_id, e.v, c.cell_id,
          ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                            ORDER BY ROUND(list_dot_product(e.v, c.cv)
-                                           / (sqrt(list_dot_product(e.v, e.v))
-                                              * sqrt(list_dot_product(c.cv, c.cv))), 4) DESC,
+                            ORDER BY {_cosine_sql("e.v", "c.cv", 37)} DESC,
                                      c.cell_id ASC) AS rn
   FROM e CROSS JOIN cent{it - 1} c
 ),

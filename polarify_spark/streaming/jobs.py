@@ -24,20 +24,14 @@ def scoped_shuffle_partitions(spark: "SparkSession", n: int):
     rows is pure overhead, while a 100 TB keyed state wants hundreds.
     Scoped so batch plans in the same session are untouched.
 
-    Serialized against every other scoped conf block in this process via
-    ``sources.catalog.CONF_SCOPE_LOCK`` (session conf is session-global; a
+    Serialized against every other scoped conf block in this process
+    (``sources.catalog._scoped_confs``; session conf is session-global: a
     concurrent unscoped planner thread would still see the override —
     build streaming queries through these accessors)."""
-    from ..sources.catalog import CONF_SCOPE_LOCK
+    from ..sources.catalog import _scoped_confs
 
-    key = "spark.sql.shuffle.partitions"
-    with CONF_SCOPE_LOCK:
-        old = spark.conf.get(key)
-        spark.conf.set(key, str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set(key, old)
+    with _scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)}):
+        yield
 
 
 def streaming_events(

@@ -234,3 +234,24 @@ def test_plan_family_durable_dir_is_named_by_the_corpus_key(
         ("evens", "durable"),
         ("('odd', 1)", "durable"),
     ]
+
+
+def test_detached_dict_keys_its_artifact_by_the_corpus(spark, tmp_path):
+    """A dict released between two ``artifact`` calls on it still keys its
+    durable artifacts by the corpus that registered it: the dir is
+    ``<name>-<artifact_key(src)>``, the one a later session looks up, and
+    not one keyed by the built plan."""
+    from polarify_spark.operators import release_shared_caches
+    from polarify_spark.operators._memo import DEDUP
+
+    src = spark.range(6).selectExpr("id AS doc_id")
+    memo = DEDUP.corpus(src)
+    release_shared_caches(spark, scope="dedup")
+    art_dir = tmp_path / "artifacts"
+    spark.conf.set(ARTIFACTS_DIR_CONF, str(art_dir))
+    try:
+        out = DEDUP.artifact(memo, "x", lambda: src.where("doc_id < 3"))
+        assert sorted(r.doc_id for r in out.collect()) == [0, 1, 2]
+    finally:
+        spark.conf.unset(ARTIFACTS_DIR_CONF)
+    assert [p.name for p in art_dir.iterdir()] == [f"x-{artifact_key(src)}"]

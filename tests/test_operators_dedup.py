@@ -730,10 +730,8 @@ def test_durable_artifact_mode_matches_localcheckpoint(spark, tmp_path):
     import os
 
     from polarify_spark.operators import release_shared_caches
-    from polarify_spark.operators.dedup import (
-        ARTIFACTS_DIR_CONF,
-        dedup_repeated_spans,
-    )
+    from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF
+    from polarify_spark.operators.dedup import dedup_repeated_spans
     from polarify_spark.operators.refine import docs_strip_repeated_spans
 
     shared = (
@@ -800,8 +798,8 @@ def test_durable_artifact_mode_lsh_family_parity(spark, tmp_path):
     the end-to-end queries built on them return identical results in
     both modes, and each family publishes its artifact dir."""
     from polarify_spark.operators import release_shared_caches
+    from polarify_spark.operators._memo import ARTIFACTS_DIR_CONF
     from polarify_spark.operators.dedup import (
-        ARTIFACTS_DIR_CONF,
         dedup_lsh_jaccard,
         dedup_simhash_pairs,
     )

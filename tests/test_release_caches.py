@@ -316,11 +316,19 @@ def test_corpus_memo_build_new_session_threads_share_one_build():
     assert memo["sfX"] == (sess_b, "mine")
 
 
+def _attached(memo: dict) -> bool:
+    """Whether ``memo`` is still a dict of the DEDUP registry."""
+    from polarify_spark.operators._memo import DEDUP
+
+    with DEDUP.lock:
+        return any(m is memo for _src, m in DEDUP.memo)
+
+
 def test_release_quiesces_inflight_handle_build(spark):
     """A release racing a mid-flight simhash handle build must not leave a
     handle whose memo dict is detached from the registry (ADVICE r12 —
-    ``DEDUP.src`` returning None would key later durable artifacts off
-    session-specific checkpoint plans). The fix: ``release_shared_caches``
+    such a handle would pin the detached dict's checkpoints past the
+    release). The fix: ``release_shared_caches``
     acquires every per-key handle lock before the paired clears, so it
     BLOCKS behind the builder and the clears always run after the racing
     insert — afterwards the handle memo is empty and a fresh build
@@ -368,13 +376,14 @@ def test_release_quiesces_inflight_handle_build(spark):
     with SIMHASH_HANDLE.lock:
         assert SIMHASH_HANDLE.memo == {}
     memo, _ = result["entry"]
-    assert DEDUP.src(memo) is None, "builder's memo is detached"
+    assert not _attached(memo), "builder's memo is detached"
+    assert DEDUP.src(memo) is grams, "a detached dict still names its corpus"
 
     # a fresh consumer rebuilds an ATTACHED handle transparently
     fresh_memo, _ = SIMHASH_HANDLE.get(
         spark, key, lambda: (DEDUP.corpus(grams), grams)
     )
-    assert DEDUP.src(fresh_memo) is not None
+    assert _attached(fresh_memo)
 
     # drop the synthetic key so later tests see pristine registries
     release_shared_caches(spark, scope="dedup")
@@ -449,8 +458,6 @@ def test_release_stress_never_leaves_detached_handles(spark):
     with SIMHASH_HANDLE.lock:
         leftovers = list(SIMHASH_HANDLE.memo.values())
     for _session, (memo, _frame) in leftovers:
-        assert DEDUP.src(memo) is not None, (
-            "detached handle survived a release"
-        )
+        assert _attached(memo), "detached handle survived a release"
 
     release_shared_caches(spark, scope="dedup")  # pristine for later tests
